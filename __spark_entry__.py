@@ -4460,7 +4460,7 @@ def _q236_consistent_hashing(spark, sf):
 def _q237_salting_sim(spark, sf):
     # Salting payoff simulation (operators/sharding.py): the q226
     # hot-host distribution under 16 reducers, plain vs salt=8 —
-    # the measured speedup kg_job's coref_salt buys.
+    # the measured speedup kg_job's COREF_SALT buys.
     from knowledgebase_processor_spark.operators.sharding import (
         salting_simulation)
     d = _t(spark, sf, "documents").selectExpr(

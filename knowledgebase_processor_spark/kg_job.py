@@ -12,13 +12,19 @@ last materialized table), per-partition lineage rows, and run metrics:
   5. canonical    coreference edges -> connected components -> canonical ids
   6. materialize  url-hash bucketed MERGE upsert of triples + entity table
 
-Re-running with the same ``work_dir`` skips every stage whose checkpoint
-exists (sinks.checkpoint_stage) — kill the job after stage 3 and the next
-invocation starts at stage 4.
+Each checkpointed stage is declared once, as one ``stage(name, build,
+metric)`` call: ``sinks.checkpoint_stage`` runs ``build`` only when the
+stage has no finished checkpoint (or ``force`` is set), and the stage's
+row count lands in the run metrics either way.  Re-running
+with the same ``work_dir`` therefore skips every finished stage — kill
+the job after stage 3 and the next invocation starts at stage 4 — and
+rewrites no checkpoint.  Only the stage-6 upsert runs every time; it is
+idempotent.
 """
 
 from __future__ import annotations
 
+import importlib
 import os
 import time
 
@@ -34,10 +40,22 @@ from .operators.triples import explode_merged, triples_from_entities
 from .operators.wikilink_resolve import documents_dimension, resolve_wikilinks_merged
 from .sources.web_pages import pages_to_documents
 
+# Head-entity-skew salt of the coreference member->representative join
+# (components.coreference_edges): a head alias's members spread over this
+# many reducers instead of one.  The output is salt-invariant.
+COREF_SALT = 16
+
+# Serialization exports — the reference's download surface
+# (webapp/backend/main.py:254-281 offers turtle | json-ld | xml via
+# rdflib.serialize): format -> (module, per-document emitter).
+_EXPORTERS = {"turtle": ("sinks_ttl", "to_turtle"),
+              "json-ld": ("sinks_rdf", "to_jsonld"),
+              "xml": ("sinks_rdf", "to_rdfxml")}
+
 
 def run(spark: SparkSession, pages: DataFrame, work_dir: str,
         alias_dict: dict | None = None, force: bool = False,
-        openie: bool = False, coref_salt: int | None = 16,
+        openie: bool = False,
         dedup: bool = False, rewrite_canonical: bool = False,
         entailment: bool = False,
         rule_completion: bool = False, rule_min_support: int = 2,
@@ -47,17 +65,14 @@ def run(spark: SparkSession, pages: DataFrame, work_dir: str,
         export_formats: tuple[str, ...] | list[str] | None = None) -> dict:
     """Run (or resume) the full pipeline; returns run metrics.
 
+    Every option is validated before the first stage directory is
+    written.
+
     ``openie=True`` adds the OpenIE-style SVO relation stage
     (operators/openie.py): its triples land in the same table under the
     ``kb:rel/`` predicate namespace, disjoint from the reference's
     structural predicates, so the reference-parity P/R gate is unaffected
     (filter one predicate prefix to compare).
-
-    ``coref_salt`` is the north rule's explicit head-entity-skew salt for
-    the coreference member->representative join (components.py): a head
-    alias's members spread over ``coref_salt`` reducers instead of one.
-    Output is salt-invariant; set ``None`` to rely on AQE skew-join
-    splitting alone.
 
     ``dedup=True`` inserts stage 0: corpus dedup (exact fingerprint →
     banded MinHash LSH → Jaccard verify → connected components →
@@ -66,12 +81,24 @@ def run(spark: SparkSession, pages: DataFrame, work_dir: str,
     large fraction of pages are boilerplate re-crawls; dropping them
     ahead of the Arrow extraction stage is the single biggest cost lever
     the job has.  Checkpointed like every other stage.
+
+    Documents whose extraction raises become ``error`` rows of the
+    ``entities`` table (counted in ``lineage_extract.n_errors``); they
+    emit no triple and no canonical entity.
     """
+    for fmt in export_formats or ():
+        if fmt not in _EXPORTERS:
+            raise ValueError(f"unknown export format {fmt!r}; "
+                             f"supported: {sorted(_EXPORTERS)}")
     t_start = time.time()
     metrics: dict[str, float] = {}
 
-    def stage(name):
-        return os.path.join(work_dir, name)
+    def stage(name, build, metric=None, bucket_key=None):
+        df = sinks.checkpoint_stage(build, os.path.join(work_dir, name), spark,
+                                    force, bucket_key=bucket_key)
+        if metric:
+            metrics[metric] = df.count()
+        return df
 
     # 00: url canonicalization through the crawl's redirect map
     # (optional).  ``url_redirects`` is the (src, dst) 3xx log; pointer
@@ -84,15 +111,11 @@ def run(spark: SparkSession, pages: DataFrame, work_dir: str,
     # is a plain shuffle equi-join on url — the mapping can be billions
     # of rows, so no broadcast; AQE splits hot destinations.
     if url_redirects is not None:
-        rpath0 = stage("url_canonical")
-        if force or not os.path.exists(os.path.join(rpath0, "_SUCCESS")):
-            from .operators.redirects import resolve_redirects
-            (resolve_redirects(url_redirects)
-             .filter(F.col("resolved"))
-             .select("url", "final_url")
-             .write.mode("overwrite").parquet(rpath0))
-        mapping = spark.read.parquet(rpath0)
-        metrics["n_redirects_resolved"] = mapping.count()
+        from .operators.redirects import resolve_redirects
+        mapping = stage("url_canonical", lambda: (
+            resolve_redirects(url_redirects)
+            .filter(F.col("resolved")).select("url", "final_url")),
+            "n_redirects_resolved")
         pages = (pages.join(mapping, "url", "left")
                  .withColumn("url", F.coalesce("final_url", "url"))
                  .drop("final_url"))
@@ -102,98 +125,77 @@ def run(spark: SparkSession, pages: DataFrame, work_dir: str,
     # 0: corpus dedup ahead of extraction (optional)
     if dedup:
         from .operators.dedup import dedup_corpus
-        dpath = stage("dedup_keep")
+        keep = stage("dedup_keep", lambda: (
+            dedup_corpus(docs, "doc_id", "text")
+            .filter(F.col("doc_id") == F.col("canonical_id"))
+            .select("doc_id")), "n_pages_kept")
         # the input count is persisted beside the keep-list (underscore
         # name: ignored by the parquet reader) so a checkpoint RESUME
         # does not re-scan and re-parse the whole crawl input just to
         # fill this metric
-        meta_f = os.path.join(dpath, "_n_total")
-        if force or not os.path.exists(os.path.join(dpath, "_SUCCESS")):
-            keep = (dedup_corpus(docs, "doc_id", "text")
-                    .filter(F.col("doc_id") == F.col("canonical_id"))
-                    .select("doc_id"))
-            keep.write.mode("overwrite").parquet(dpath)
+        meta_f = os.path.join(work_dir, "dedup_keep", "_n_total")
+        if not os.path.exists(meta_f):
             with open(meta_f, "w") as fh:
                 fh.write(str(docs.count()))
-        keep = spark.read.parquet(dpath)
-        n_total = (int(open(meta_f).read()) if os.path.exists(meta_f)
-                   else docs.count())     # pre-sidecar checkpoints
+        with open(meta_f) as fh:
+            metrics["n_pages_in"] = int(fh.read())
         docs = docs.join(keep, "doc_id")
-        metrics["n_pages_in"] = n_total
-        metrics["n_pages_kept"] = keep.count()
 
-    # 1+2: extraction (pre-merged) + wikilink resolution, checkpointed
-    ents_path = stage("entities")
-    if force or not os.path.exists(os.path.join(ents_path, "_SUCCESS")):
+    # 1+2: extraction (pre-merged) + wikilink resolution
+    def extract():
         merged = extract_merged_entities_df(docs, "doc_id", "text", "path", "title")
-        dim = documents_dimension(docs, "doc_id", "path")
-        resolved = resolve_wikilinks_merged(merged, dim)
-        resolved = sinks.bucketed(resolved, key="source_document_uri")
-        resolved.write.mode("overwrite").partitionBy("part_bucket").parquet(ents_path)
-    entities = spark.read.parquet(ents_path)
-    metrics["n_entities"] = entities.count()
+        return resolve_wikilinks_merged(
+            merged, documents_dimension(docs, "doc_id", "path"))
+    entities = stage("entities", extract, "n_entities",
+                     bucket_key="source_document_uri")
 
-    # lineage for the extraction stage (per-partition counts + key ranges)
-    sinks.lineage(entities, "extract", key="source_document_uri") \
-        .write.mode("overwrite").parquet(stage("lineage_extract"))
+    # lineage for the extraction stage (per-partition counts, error rows
+    # and key ranges)
+    stage("lineage_extract",
+          lambda: sinks.lineage(entities, "extract", key="source_document_uri"))
 
-    # 3: mention detection (flat entity rows -> merged-compatible arrays
-    # are not needed; mention triples are emitted separately)
-    mention_triples = None
+    # 3: mention detection (its triples are emitted separately)
+    mentions = None
     if alias_dict:
-        mpath = stage("mention_entities")
-        if force or not os.path.exists(os.path.join(mpath, "_SUCCESS")):
-            m = mentions_to_entities(detect_mentions(docs, alias_dict))
-            m.write.mode("overwrite").parquet(mpath)
-        mention_entities = spark.read.parquet(mpath)
-        metrics["n_mentions"] = mention_entities.count()
-        mention_triples = triples_from_entities(mention_entities, dedup=True)
+        mentions = stage("mention_entities", lambda: mentions_to_entities(
+            detect_mentions(docs, alias_dict)), "n_mentions")
 
     # 3b: OpenIE-style SVO relations (north-star addition; kb:rel/ ns)
-    openie_triples_df = None
+    openie_df = None
     if openie:
         from .operators.openie import openie_to_kg_triples, openie_triples
-        opath = stage("openie")
-        if force or not os.path.exists(os.path.join(opath, "_SUCCESS")):
-            openie_to_kg_triples(openie_triples(docs)) \
-                .write.mode("overwrite").parquet(opath)
-        openie_triples_df = spark.read.parquet(opath)
-        metrics["n_openie"] = openie_triples_df.count()
+        openie_df = stage("openie", lambda: openie_to_kg_triples(
+            openie_triples(docs)), "n_openie")
 
-    # 4: triples — checkpoint name encodes the openie flag so resuming a
+    # 4: triples — the stage name encodes the openie flag so resuming a
     # work_dir built without OpenIE (or vice versa) recomputes the union
     # instead of silently serving the other configuration's table
-    tpath = stage("triples_openie" if openie else "triples")
-    if force or not os.path.exists(os.path.join(tpath, "_SUCCESS")):
+    def emit():
         triples = explode_merged(entities)
-        if mention_triples is not None:
-            triples = triples.unionByName(mention_triples)
-        if openie_triples_df is not None:
-            triples = triples.unionByName(openie_triples_df)
-        sinks.bucketed(triples, key="source_doc") \
-            .write.mode("overwrite").partitionBy("part_bucket").parquet(tpath)
-    triples = spark.read.parquet(tpath)
-    metrics["n_triples"] = triples.count()
+        if mentions is not None:
+            triples = triples.unionByName(triples_from_entities(mentions))
+        if openie_df is not None:
+            triples = triples.unionByName(openie_df)
+        return triples
+    triples = stage("triples_openie" if openie else "triples", emit,
+                    "n_triples", bucket_key="source_doc")
 
     # 5: canonicalization — coreference edges over wikilinks/mentions,
     # label-propagation connected components, canonical entity table
-    cpath = stage("canonical")
-    if force or not os.path.exists(os.path.join(cpath, "_SUCCESS")):
-        flat_links = entities.filter(F.col("kind") == "wikilink").select(
+    def canonicalize():
+        edge_src = entities.filter(F.col("kind") == "wikilink").select(
             "kind", "kb_id", "source_document_uri",
             F.try_element_at("resolved_document_uri", F.lit(1)).alias("resolved_document_uri"),
             F.lit(None).cast("string").alias("label"))
-        edge_src = flat_links
-        if alias_dict:
+        if mentions is not None:
             edge_src = edge_src.unionByName(
-                mention_entities.select("kind", "kb_id", "source_document_uri",
-                                        "resolved_document_uri", "label"))
-        edges = coreference_edges(edge_src, salt=coref_salt)
-        labels = connected_components(edges)
-        canon = canonical_entities(
-            entities.select("kind", "kb_id", "source_document_uri"), labels)
-        canon.write.mode("overwrite").parquet(cpath)
-    canonical = spark.read.parquet(cpath)
+                mentions.select("kind", "kb_id", "source_document_uri",
+                                "resolved_document_uri", "label"))
+        labels = connected_components(coreference_edges(edge_src, salt=COREF_SALT))
+        return canonical_entities(
+            entities.filter(F.col("kind") != "error")
+            .select("kind", "kb_id", "source_document_uri"), labels)
+    canonical = stage("canonical", canonicalize)
     metrics["n_canonical_clusters"] = canonical.select("canonical_id").distinct().count()
 
     # 6: materialize deduplicated triple table via idempotent MERGE upsert.
@@ -202,11 +204,11 @@ def run(spark: SparkSession, pages: DataFrame, work_dir: str,
     # <work_dir-basename>.kg_triples; this sandbox has no Iceberg jars,
     # so merge_upsert_iceberg returns False and the parquet
     # bucket-overwrite emulation (same idempotent semantics) runs.
-    final_path = stage("kg_triples")
     flat = triples.drop("part_bucket")
     if not sinks.merge_upsert_iceberg(spark, flat, "kg.kg_triples",
                                       key="source_doc"):
-        sinks.merge_upsert(spark, flat, final_path, key="source_doc")
+        sinks.merge_upsert(spark, flat, os.path.join(work_dir, "kg_triples"),
+                           key="source_doc")
 
     # 6b: canonical-id triple table — the stage-5 coreference labels
     # rewrite subjects/URI objects to their cluster representatives and
@@ -215,14 +217,10 @@ def run(spark: SparkSession, pages: DataFrame, work_dir: str,
     # "deduplicated entity/relation tables").
     if rewrite_canonical:
         from .operators.sameas import rewrite_with_labels
-        rpath = stage("kg_triples_canonical")
-        if force or not os.path.exists(os.path.join(rpath, "_SUCCESS")):
-            label_map = canonical.select(
-                F.col("kb_id").alias("node"),
-                F.col("canonical_id").alias("canonical"))
-            rewrite_with_labels(flat, label_map) \
-                .write.mode("overwrite").parquet(rpath)
-        metrics["n_canonical_triples"] = spark.read.parquet(rpath).count()
+        stage("kg_triples_canonical", lambda: rewrite_with_labels(
+            flat, canonical.select(F.col("kb_id").alias("node"),
+                                   F.col("canonical_id").alias("canonical"))),
+            "n_canonical_triples")
 
     # 6b': IFP-driven canonicalization (optional): inverse-functional
     # predicate agreement (shared email/homepage objects,
@@ -235,15 +233,10 @@ def run(spark: SparkSession, pages: DataFrame, work_dir: str,
         from .operators.sameas import (
             canonicalize_triples, ifp_sameas_candidates,
         )
-        ipath = stage("kg_triples_ifp")
-        if force or not os.path.exists(os.path.join(ipath, "_SUCCESS")):
-            cands = (ifp_sameas_candidates(
-                flat.select("subj", "pred", "obj"))
-                .select(F.col("subj_a").alias("src"),
-                        F.col("subj_b").alias("dst")))
-            canonicalize_triples(flat, cands) \
-                .write.mode("overwrite").parquet(ipath)
-        metrics["n_ifp_triples"] = spark.read.parquet(ipath).count()
+        stage("kg_triples_ifp", lambda: canonicalize_triples(
+            flat, ifp_sameas_candidates(flat.select("subj", "pred", "obj"))
+            .select(F.col("subj_a").alias("src"), F.col("subj_b").alias("dst"))),
+            "n_ifp_triples")
 
     # 6c: RDFS entailment materialization (operators/rdfs.rdfs_closure):
     # schema triples close on the tiny side, instance triples get one
@@ -252,55 +245,37 @@ def run(spark: SparkSession, pages: DataFrame, work_dir: str,
     # entailed table is (subj, pred, obj) only, beside the doc-scoped one.
     if entailment:
         from .operators.rdfs import rdfs_closure
-        epath = stage("kg_triples_entailed")
-        if force or not os.path.exists(os.path.join(epath, "_SUCCESS")):
-            rdfs_closure(flat.select("subj", "pred", "obj", "obj_is_uri")) \
-                .write.mode("overwrite").parquet(epath)
-        metrics["n_entailed"] = spark.read.parquet(epath).count()
+        stage("kg_triples_entailed", lambda: rdfs_closure(
+            flat.select("subj", "pred", "obj", "obj_is_uri")), "n_entailed")
 
     # 6d: rule-based KB completion (operators/rulemine.py): AMIE-lite
     # path rules mined from the materialized graph, confident-rule
     # body instantiations whose head is missing become the INFERRED
     # triple table (with rule provenance + conf_ppm) beside the
     # asserted one — the cheap densifier before any learned link
-    # predictor, same per-stage checkpoint/resume contract.
+    # predictor.
     if rule_completion:
         from .operators.rulemine import apply_rules, mine_path_rules
-        ipath2 = stage("kg_triples_inferred")
-        if force or not os.path.exists(os.path.join(ipath2, "_SUCCESS")):
+
+        def infer():
             base = flat.select("subj", "pred", "obj")
             rules = mine_path_rules(base, min_support=rule_min_support)
-            apply_rules(base, rules, min_conf_ppm=rule_min_conf_ppm) \
-                .write.mode("overwrite").parquet(ipath2)
-        metrics["n_inferred"] = spark.read.parquet(ipath2).count()
+            return apply_rules(base, rules, min_conf_ppm=rule_min_conf_ppm)
+        stage("kg_triples_inferred", infer, "n_inferred")
 
-    # 7: serialization exports — the reference's download surface
-    # (webapp/backend/main.py:254-281 offers turtle | json-ld | xml via
-    # rdflib.serialize) reachable from the north-star job, not just the
-    # operator API.  Each format is a per-document (source_doc, payload)
-    # parquet table with the SAME checkpoint/resume contract as every
-    # other stage; the three emitters are isomorphism-tested against
+    # 7: serialization exports, reachable from the north-star job, not
+    # just the operator API.  Each format is a per-document (source_doc,
+    # payload) table; the three emitters are isomorphism-tested against
     # each other in tests/test_sinks_rdf.py.  At scale the table IS the
     # deliverable (one row per doc, written distributed); fixture-sized
     # runs can fan out files with sinks_ttl.write_turtle_files.
-    _EXPORTERS = {"turtle": ("sinks_ttl", "to_turtle"),
-                  "json-ld": ("sinks_rdf", "to_jsonld"),
-                  "xml": ("sinks_rdf", "to_rdfxml")}
-    for fmt in (export_formats or ()):
-        if fmt not in _EXPORTERS:
-            raise ValueError(f"unknown export format {fmt!r}; "
-                             f"supported: {sorted(_EXPORTERS)}")
+    for fmt in export_formats or ():
         mod_name, fn_name = _EXPORTERS[fmt]
-        xpath = stage(f"export_{fmt.replace('-', '_')}")
-        if force or not os.path.exists(os.path.join(xpath, "_SUCCESS")):
-            import importlib
-            mod = importlib.import_module(f".{mod_name}", __package__)
-            getattr(mod, fn_name)(flat).write.mode("overwrite") \
-                .parquet(xpath)
-        metrics[f"n_export_{fmt.replace('-', '_')}"] = \
-            spark.read.parquet(xpath).count()
+        name = f"export_{fmt.replace('-', '_')}"
+        stage(name, lambda: getattr(importlib.import_module(
+            f".{mod_name}", __package__), fn_name)(flat), f"n_{name}")
 
     metrics["wall_s"] = round(time.time() - t_start, 3)
-    sinks.write_metrics(spark, stage("metrics"), "kg_job",
+    sinks.write_metrics(spark, os.path.join(work_dir, "metrics"), "kg_job",
                         {k: float(v) for k, v in metrics.items()})
     return metrics

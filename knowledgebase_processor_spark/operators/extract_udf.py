@@ -11,6 +11,7 @@ of killing the job.
 
 from __future__ import annotations
 
+from functools import partial
 from typing import Iterator
 
 import pandas as pd
@@ -24,6 +25,7 @@ from .metadata import derive_title
 _INT_FIELDS = {"level", "item_count", "row_count", "column_count",
                "line_count", "position_start", "position_end"}
 _BOOL_FIELDS = {"is_completed", "ordered"}
+_MERGED_FIELDS = [f.name for f in ENTITIES_MERGED.fields]
 
 
 def _effective_title(title, text: str, path: str) -> str:
@@ -46,6 +48,54 @@ def _to_frame(rows: list[dict]) -> pd.DataFrame:
     return df
 
 
+def extract_batches(batches: Iterator[pd.DataFrame], doc_id_col: str,
+                    text_col: str, path_col: str | None,
+                    title_col: str | None,
+                    merge: bool) -> Iterator[pd.DataFrame]:
+    """The per-document extraction loop behind both operators: one output
+    frame per Arrow batch, flat ENTITIES rows or, with ``merge``, the
+    per-document merged ENTITIES_MERGED rows.  A document whose
+    extraction raises yields one ``error`` row (its id as ``kb_id`` and
+    ``source_document_uri``, ``Type: message`` as ``text``) on both paths,
+    so no document vanishes silently; error rows emit no triples."""
+    extract = extract_entities_merged if merge else extract_entities
+    fields = _MERGED_FIELDS if merge else ENTITY_FIELDS
+    for batch in batches:
+        rows: list[dict] = []
+        for rec in batch.itertuples(index=False):
+            doc_id = getattr(rec, doc_id_col)
+            try:
+                text = getattr(rec, text_col) or ""
+                path = getattr(rec, path_col) if path_col else "temp_document.md"
+                title = (_effective_title(getattr(rec, title_col), text, path)
+                         if title_col else "Temporary Document")
+                rows.extend(extract(doc_id, text, path, title))
+            except Exception as exc:  # per-document isolation
+                msg = f"{type(exc).__name__}: {exc}"
+                rows.append({**dict.fromkeys(fields),
+                             "kind": "error", "kb_id": str(doc_id),
+                             "source_document_uri": str(doc_id),
+                             "text": [msg] if merge else msg})
+        yield pd.DataFrame(rows, columns=fields) if merge else _to_frame(rows)
+
+
+def _extract(docs: DataFrame, doc_id_col: str, text_col: str,
+             path_col: str | None, title_col: str | None,
+             merge: bool) -> DataFrame:
+    cols = [doc_id_col, text_col]
+    if path_col:
+        cols.append(path_col)
+    if title_col:
+        cols.append(title_col)
+    # Column pruning before the Python stage; a null id has no KG identity
+    # (every URI embeds it) and would silently mint "None/..." nodes.
+    narrowed = docs.select(*cols).filter(F.col(doc_id_col).isNotNull())
+    return narrowed.mapInPandas(
+        partial(extract_batches, doc_id_col=doc_id_col, text_col=text_col,
+                path_col=path_col, title_col=title_col, merge=merge),
+        schema=ENTITIES_MERGED if merge else ENTITIES)
+
+
 def extract_entities_df(
     docs: DataFrame,
     doc_id_col: str = "doc_id",
@@ -60,34 +110,7 @@ def extract_entities_df(
     string-content defaults apply (pipeline_orchestrator.py:190-203):
     path ``temp_document.md``, title ``Temporary Document``.
     """
-    cols = [doc_id_col, text_col]
-    if path_col:
-        cols.append(path_col)
-    if title_col:
-        cols.append(title_col)
-    # Column pruning before the Python stage; a null id has no KG identity
-    # (every URI embeds it) and would silently mint "None/..." nodes.
-    narrowed = docs.select(*cols).filter(F.col(doc_id_col).isNotNull())
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: list[dict] = []
-            for rec in batch.itertuples(index=False):
-                doc_id = getattr(rec, doc_id_col)
-                text = getattr(rec, text_col) or ""
-                path = getattr(rec, path_col) if path_col else "temp_document.md"
-                title = (_effective_title(getattr(rec, title_col), text, path)
-                         if title_col else "Temporary Document")
-                try:
-                    rows.extend(extract_entities(doc_id, text, path, title))
-                except Exception as exc:  # per-document isolation
-                    rows.append({**dict.fromkeys(ENTITY_FIELDS),
-                                 "kind": "error", "kb_id": str(doc_id),
-                                 "source_document_uri": str(doc_id),
-                                 "text": f"{type(exc).__name__}: {exc}"})
-            yield _to_frame(rows)
-
-    return narrowed.mapInPandas(run, schema=ENTITIES)
+    return _extract(docs, doc_id_col, text_col, path_col, title_col, merge=False)
 
 
 def extract_merged_entities_df(
@@ -99,31 +122,7 @@ def extract_merged_entities_df(
 ) -> DataFrame:
     """Like extract_entities_df but with per-document duplicate-entity
     merging done in-process (extract.core.extract_entities_merged), so the
-    output needs no dedup shuffle — every varying field is an array.
-    Errors are dropped here (they carry no mergeable fields); use
-    extract_entities_df when the error side-channel matters.
+    output needs no dedup shuffle — every varying field is an array
+    (an error row's message is the one element of ``text``).
     """
-    merged_fields = [f.name for f in ENTITIES_MERGED.fields]
-    cols = [doc_id_col, text_col]
-    if path_col:
-        cols.append(path_col)
-    if title_col:
-        cols.append(title_col)
-    narrowed = docs.select(*cols).filter(F.col(doc_id_col).isNotNull())
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for batch in batches:
-            rows: list[dict] = []
-            for rec in batch.itertuples(index=False):
-                doc_id = getattr(rec, doc_id_col)
-                text = getattr(rec, text_col) or ""
-                path = getattr(rec, path_col) if path_col else "temp_document.md"
-                title = (_effective_title(getattr(rec, title_col), text, path)
-                         if title_col else "Temporary Document")
-                try:
-                    rows.extend(extract_entities_merged(doc_id, text, path, title))
-                except Exception:
-                    continue
-            yield pd.DataFrame(rows, columns=merged_fields)
-
-    return narrowed.mapInPandas(run, schema=ENTITIES_MERGED)
+    return _extract(docs, doc_id_col, text_col, path_col, title_col, merge=True)

@@ -304,11 +304,6 @@ def list_graphs(triples: DataFrame) -> DataFrame:
     return triples.select(F.col("source_doc").alias("g")).distinct().orderBy("g")
 
 
-def describe(triples: DataFrame, uri: str) -> DataFrame:
-    """DESCRIBE <uri>: all triples whose subject is the node."""
-    return triples.filter(F.col("subj") == uri)
-
-
 def ask(triples: DataFrame, patterns: list[Pattern]) -> bool:
     """ASK { ... }: does the pattern have any solution."""
     return match_bgp(triples, patterns).limit(1).count() > 0

@@ -210,13 +210,6 @@ def repetition_stats(docs: DataFrame, id_col: str = "doc_id",
     return docs.select(F.col(id_col), *[v.alias(k) for k, v in ex.items()])
 
 
-def quality_signals(docs: DataFrame, id_col: str = "doc_id",
-                    text_col: str = "text") -> DataFrame:
-    """Per-document shape signals (Gopher §A.1.1 quality rules)."""
-    ex = _quality_exprs(F.col(text_col))
-    return docs.select(F.col(id_col), *[v.alias(k) for k, v in ex.items()])
-
-
 # (rule name, signal, predicate) — evaluation order is the output order.
 _RULES: list[tuple[str, str]] = [
     ("ok_word_count", "n_words"),

@@ -7,7 +7,7 @@ moves ~N/(N+1) of all keys; a consistent-hash ring moves ~1/(N+1) —
 the difference is the whole re-shard bill for a 100 TB table.  q237:
 a hot key pins one reducer at the head-entity mass; salting by s
 splits it s ways — the simulated max-reducer-load ratio is exactly
-the wall-clock speedup AQE's skew split or kg_job's coref_salt buys).
+the wall-clock speedup AQE's skew split or kg_job's COREF_SALT buys).
 
 Everything is portable-md5 integer arithmetic (split.py family):
 vnode ring positions, key positions, reducer buckets — the oracles
@@ -140,7 +140,7 @@ def salting_simulation(df: DataFrame, key_col: str, id_col: str,
     """-> one row (n_rows, max_load_plain, max_load_salted,
     speedup_ppm): max reducer load under hash partitioning of the raw
     key vs the salted key — the measured payoff of kg_job's
-    coref_salt / the LSH salting contract."""
+    COREF_SALT / the LSH salting contract."""
     base = df.select(
         F.col(key_col).cast("string").alias("k"),
         F.col(id_col).cast("string").alias("i"))

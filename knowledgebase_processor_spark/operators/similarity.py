@@ -118,34 +118,6 @@ def _hyperplanes(dim: int, bits: int, seed: int = 42) -> list[list[float]]:
     return [[rnd.gauss(0, 1) for _ in range(dim)] for _ in range(bits)]
 
 
-def lsh_bucket_expr(vec: "Column | str",
-                    planes: list[list[float]]) -> Column:
-    """Sign-bit sketch: bucket id from the signs of <v, plane_i>.
-
-    Pass a STRING (an expression naming an ``array<double>`` column) to
-    take the flat codegen dot path; a Column keeps the generic
-    interpreted form (unknown dim / uncast input).
-
-    Expression form — fine up to ~bits x dim ~ 512 terms; past that the
-    fused method trips Janino's 64 KB limit and the stage silently runs
-    interpreted.  Production paths use :func:`lsh_buckets_multi` (the
-    Arrow-batched kernel, identical buckets at any width); this stays
-    as the inline-expression variant for embedding a bucket in a larger
-    single projection."""
-    bucket = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        if isinstance(vec, str):
-            d = F.expr(_flat_dot_lit_sql(vec, plane))
-        else:
-            # one list-literal call per plane, not dim F.lit round-trips
-            p = F.lit([float(x) for x in plane]).cast("array<double>")
-            d = dot(vec.cast("array<double>"), p)
-        bit = F.when(d >= 0,
-                     F.shiftleft(F.lit(1).cast("long"), i)).otherwise(F.lit(0).cast("long"))
-        bucket = bucket.bitwiseOR(bit)
-    return bucket
-
-
 def lsh_buckets_multi(vecs: DataFrame, dim: int, bits: int = 8,
                       tables: int = 1, id_col: str = "vec_id",
                       vec_col: str = "embedding",

@@ -248,7 +248,7 @@ def explode_merged(merged: DataFrame) -> DataFrame:
                 F.col("t.obj_datatype").alias("obj_datatype"), "source_doc"))
 
 
-def triples_from_entities(entities: DataFrame, dedup: bool = True) -> DataFrame:
+def triples_from_entities(entities: DataFrame) -> DataFrame:
     """Compile KIND_RULES into one exploded triple stream.
 
     Returns the TRIPLES schema: (subj, pred, obj, obj_is_uri, obj_datatype,
@@ -281,8 +281,6 @@ def triples_from_entities(entities: DataFrame, dedup: bool = True) -> DataFrame:
             "source_doc",
         )
     )
-    if not dedup:
-        return exploded
     # Graph set semantics.  source_doc leads the keys: URIs are doc-scoped
     # (uris.py), so duplicates only collide within a document and the
     # shuffle hash-distributes by document first.

@@ -105,9 +105,12 @@ def documents_dimension(docs: DataFrame, doc_id_col: str = "doc_id",
 
 def resolve_wikilinks_merged(entities: DataFrame, dim: DataFrame,
                              broadcast_cap: int = BROADCAST_CAP_BYTES) -> DataFrame:
-    """resolve_wikilinks over the pre-merged (array-valued) entity frame:
-    a wikilink carries exactly one target_path, so the join key is its
-    single element and the resolved URI lands as a one-element array."""
+    """Fill wikilink ``resolved_document_uri`` via the 3-key lookup cascade
+    (find_document_by_path, document_registry.py:58-74) over the
+    pre-merged (array-valued) entity frame — one broadcast left join with
+    a precedence coalesce, single lineage, shuffle-free.  A wikilink
+    carries exactly one target_path, so the join key is its single
+    element and the resolved URI lands as a one-element array."""
     cond = ((F.col("kind") == "wikilink")
             & (F.try_element_at(F.col("target_path"), F.lit(1)) == F.col("match_key")))
     out = entities.join(_hinted_dim(dim, broadcast_cap), on=cond, how="left")
@@ -140,18 +143,3 @@ def resolve_by_suffix(wikilinks: DataFrame, docs_dim: DataFrame) -> DataFrame:
     joined = wikilinks.join(F.broadcast(side), on=cond, how="left")
     return (joined.groupBy(*wikilinks.columns)
             .agg(F.min("suffix_target").alias("suffix_resolved_uri")))
-
-
-def resolve_wikilinks(entities: DataFrame, dim: DataFrame,
-                      broadcast_cap: int = BROADCAST_CAP_BYTES) -> DataFrame:
-    """Fill wikilink.resolved_document_uri via the 3-key lookup cascade
-    (find_document_by_path, document_registry.py:58-74) — one broadcast
-    left join with a precedence coalesce, single lineage, shuffle-free."""
-    cond = (F.col("kind") == "wikilink") & (F.col("target_path") == F.col("match_key"))
-    out = entities.join(_hinted_dim(dim, broadcast_cap), on=cond, how="left")
-    return (out.withColumn(
-        "resolved_document_uri",
-        F.when(F.col("kind") == "wikilink",
-               F.coalesce("t0", "t1", "t2", "resolved_document_uri"))
-         .otherwise(F.col("resolved_document_uri")))
-        .drop("match_key", "t0", "t1", "t2"))

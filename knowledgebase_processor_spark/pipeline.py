@@ -19,11 +19,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .operators.extract_udf import extract_entities_df, extract_merged_entities_df
-from .operators.triples import explode_merged, triples_from_entities
-from .operators.wikilink_resolve import (
-    documents_dimension, resolve_wikilinks, resolve_wikilinks_merged,
-)
+from .operators.extract_udf import extract_merged_entities_df
+from .operators.triples import explode_merged
+from .operators.wikilink_resolve import documents_dimension, resolve_wikilinks_merged
 
 
 def session(app: str = "kgp-spark", cpus: int | None = None,
@@ -91,31 +89,24 @@ def documents_to_triples(docs: DataFrame,
                          text_col: str = "text",
                          path_col: str | None = None,
                          title_col: str | None = None,
-                         resolve_links: bool = False,
-                         dedup: bool = True) -> DataFrame:
-    """documents -> deduplicated triples (TRIPLES schema)."""
-    if dedup:
-        # Duplicate KG nodes are always document-scoped (uris.py), so the
-        # dedup merge happens inside the extraction UDF per document and
-        # the whole pipeline is SHUFFLE-FREE: scan -> mapInPandas ->
-        # broadcast join (wikilinks) -> explode.  rdflib's corpus-wide
-        # triple-set dedup falls out with zero exchanges.
-        merged = extract_merged_entities_df(docs, doc_id_col, text_col,
-                                            path_col, title_col)
-        if resolve_links:
-            # The registry dimension comes from the INPUT frame (id + path
-            # are known pre-extraction): one broadcast join, no second
-            # extraction pass.
-            dim = documents_dimension(docs, doc_id_col, path_col)
-            merged = resolve_wikilinks_merged(merged, dim)
-        return explode_merged(merged)
+                         resolve_links: bool = False) -> DataFrame:
+    """documents -> deduplicated triples (TRIPLES schema).
 
-    entities = extract_entities_df(docs, doc_id_col, text_col, path_col, title_col)
-    entities = entities.filter(F.col("kind") != "error")
+    Duplicate KG nodes are always document-scoped (uris.py), so the dedup
+    merge happens inside the extraction UDF per document and the whole
+    pipeline is SHUFFLE-FREE: scan -> mapInPandas -> broadcast join
+    (wikilinks) -> explode.  rdflib's corpus-wide triple-set dedup falls
+    out with zero exchanges.
+    """
+    merged = extract_merged_entities_df(docs, doc_id_col, text_col,
+                                        path_col, title_col)
     if resolve_links:
+        # The registry dimension comes from the INPUT frame (id + path
+        # are known pre-extraction): one broadcast join, no second
+        # extraction pass.
         dim = documents_dimension(docs, doc_id_col, path_col)
-        entities = resolve_wikilinks(entities, dim)
-    return triples_from_entities(entities, dedup=False)
+        merged = resolve_wikilinks_merged(merged, dim)
+    return explode_merged(merged)
 
 
 def web_pages_to_triples(pages: DataFrame, resolve_links: bool = True) -> DataFrame:

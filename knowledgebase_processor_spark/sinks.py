@@ -10,24 +10,30 @@ Spark shape of the reference's storage layer:
                                as a partition-overwrite MERGE keyed by
                                source document.  With Iceberg jars this is
                                a literal ``MERGE INTO``; on plain parquet we
-                               emulate with dynamic partition overwrite over
-                               url-hash buckets — same idempotent semantics.
+                               emulate with a dynamic partition overwrite
+                               (set on the one write, not on the session)
+                               over url-hash buckets — same idempotent
+                               semantics.
 * ``bucketed``               — range/bucket partitioning by url hash
                                (north rule "range-partitioned writes by
                                url-hash").
 * ``lineage`` / ``metrics``  — per-partition counts + error rows
                                (pipeline_orchestrator.py:24-42,160-165 per-doc
-                               error isolation and ProcessingStats), persisted
-                               so any stage can resume from its last
-                               materialized table.
-* ``checkpoint_stage``       — write-then-read-back stage boundary: restart
-                               picks up the parquet instead of recomputing.
+                               error isolation and ProcessingStats).
+* ``checkpoint_stage``       — the one owner of the stage-checkpoint
+                               convention: a stage whose directory holds a
+                               parquet ``_SUCCESS`` marker is read back,
+                               otherwise its build callable runs and is
+                               written (optionally url-hash bucketed).
+                               Re-running a job over the same directory
+                               therefore resumes from its last finished
+                               stage.
 """
 
 from __future__ import annotations
 
 import os
-import time
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -57,9 +63,10 @@ def merge_upsert(spark: SparkSession, new_rows: DataFrame, path: str,
     only, read old rows, anti-join out the incoming documents, union the
     new rows, and dynamically overwrite just those bucket partitions —
     the parquet-only equivalent of Iceberg ``MERGE INTO ... WHEN MATCHED
-    DELETE`` + INSERT.
+    DELETE`` + INSERT.  The dynamic mode is an option of that one write:
+    the session stays in static mode, where an overwrite of a partitioned
+    table replaces every bucket.
     """
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     incoming = bucketed(new_rows, key, n_buckets)
     if not os.path.isdir(path):
         incoming.write.mode("overwrite").partitionBy("part_bucket").parquet(path)
@@ -70,7 +77,8 @@ def merge_upsert(spark: SparkSession, new_rows: DataFrame, path: str,
            .filter(F.col("part_bucket").isin(touched)))
     kept = old.join(keys, on=key, how="left_anti")
     (kept.unionByName(incoming)
-     .write.mode("overwrite").partitionBy("part_bucket").parquet(path))
+     .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+     .partitionBy("part_bucket").parquet(path))
 
 
 def iceberg_merge_sql(table: str, source_view: str, key_cols: list[str],
@@ -163,16 +171,13 @@ def lineage(df: DataFrame, stage: str, key: str = "source_doc") -> DataFrame:
     """Per-partition lineage rows (FIXTURES.md §4): partition id, key
     range, row count, error count.  One extra narrow aggregation — no
     second scan of the payload columns."""
-    started = time.time()
     agg = (df.withColumn("partition_id", F.spark_partition_id())
            .groupBy("partition_id")
            .agg(F.min(key).alias("key_min"), F.max(key).alias("key_max"),
                 F.count("*").alias("n_rows"),
                 F.sum(F.when(F.col("kind") == "error", 1).otherwise(0)).alias("n_errors")
                 if "kind" in df.columns else F.lit(0).alias("n_errors")))
-    return (agg.withColumn("stage", F.lit(stage))
-            .withColumn("started_ts", F.lit(started))
-            .withColumn("finished_ts", F.lit(None).cast("double")))
+    return agg.withColumn("stage", F.lit(stage))
 
 
 def write_metrics(spark: SparkSession, path: str, stage: str,
@@ -182,15 +187,21 @@ def write_metrics(spark: SparkSession, path: str, stage: str,
         .coalesce(1).write.mode("append").parquet(path)
 
 
-def checkpoint_stage(df: DataFrame, path: str, spark: SparkSession,
-                     force: bool = False) -> DataFrame:
+def checkpoint_stage(build: Callable[[], DataFrame], path: str,
+                     spark: SparkSession, force: bool = False,
+                     bucket_key: str | None = None) -> DataFrame:
     """Materialize a stage boundary and return the re-read DataFrame.
 
     Resumability: if ``path`` already holds a successful write (parquet
-    _SUCCESS) and ``force`` is False, skip recomputation entirely — the
+    ``_SUCCESS``) and ``force`` is False, ``build`` is never called — the
     stage restarts from its last materialized table (north rule
-    "resumable from checkpoint").
+    "resumable from checkpoint"), so eager builders (connected
+    components, closures) cost nothing on resume.  ``bucket_key`` writes
+    the table url-hash partitioned by that column (``write_bucketed``).
     """
     if force or not os.path.exists(os.path.join(path, "_SUCCESS")):
-        df.write.mode("overwrite").parquet(path)
+        if bucket_key:
+            write_bucketed(build(), path, key=bucket_key)
+        else:
+            build().write.mode("overwrite").parquet(path)
     return spark.read.parquet(path)

@@ -51,25 +51,6 @@ def fixture_pages(spark: SparkSession, copies: int = 1) -> DataFrame:
         rows, "url string, warc_ts timestamp, html string, text string, lang string")
 
 
-def synthetic_pages(spark: SparkSession, n_docs: int, sections: int = 8) -> DataFrame:
-    """Larger deterministic pages: each page concatenates ``sections``
-    fixture documents (cycled, offset by page index) under H1 separators —
-    realistic Common-Crawl page sizes (2-20 KB of markdown) so extraction
-    CPU dominates fixed per-job costs in scaling measurements."""
-    fixtures = [Path(md).read_text(encoding="utf-8") for _, md, _ in spec_cases()]
-    k = len(fixtures)
-    rows = []
-    for i in range(n_docs):
-        parts = [f"# Page {i} section {s}\n\n{fixtures[(i + s) % k]}"
-                 for s in range(sections)]
-        text = "\n\n".join(parts)
-        rows.append((f"https://crawl.example.org/page-{i}.md",
-                     _EPOCH + _dt.timedelta(seconds=i),
-                     _html_wrap(text, f"page-{i}"), text, "en"))
-    return spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html string, text string, lang string")
-
-
 def extract_text(pages: DataFrame) -> DataFrame:
     """html -> text extraction operator.
 

@@ -132,24 +132,13 @@ def schedule_frontier_stream(frontier_stream):
 
 
 # ------------------------------------------------------------- EWMA drift ----
-# Streaming twin of operators/ewma.ewma_drift_report: the SAME integer
-# transition (operators/ewma.ewma_step — exact, replayable) with the
-# running (ewma_micro, n, n_flags) carried in GroupState, so a host's
-# metric stream continues its average across micro-batches.  Emits one
-# row per micro-batch per key with the post-batch state — the
-# monitoring view a drift dashboard tails.
-
-EWMA_OUT = StructType([
-    StructField("k", LongType()),
-    StructField("n", LongType()),
-    StructField("n_flags", LongType()),
-    StructField("last_ewma_micro", LongType()),
-])
-EWMA_STATE = StructType([
-    StructField("ewma", LongType()),
-    StructField("n", LongType()),
-    StructField("flags", LongType()),
-])
+# GroupState transition for a streaming twin of
+# operators/ewma.ewma_drift_report: the SAME integer transition
+# (operators/ewma.ewma_step — exact, replayable) with the running
+# (ewma_micro, n, n_flags) carried in GroupState, so a host's metric
+# stream continues its average across micro-batches.  Emits one row per
+# micro-batch per key with the post-batch state — the monitoring view a
+# drift dashboard tails.
 
 EWMA_ALPHA_PPM = 200000
 EWMA_THRESHOLD_PPM = 500000
@@ -178,16 +167,3 @@ def apply_ewma_state(
     state.update((ewma, n, flags))
     yield pd.DataFrame([{"k": key[0], "n": n, "n_flags": flags,
                          "last_ewma_micro": ewma}])
-
-
-def ewma_drift_stream(events_stream):
-    """streaming (k, o, t, x) -> per-key (k, n, n_flags,
-    last_ewma_micro) with state persisting across micro-batches."""
-    return (events_stream
-            .groupBy("k")
-            .applyInPandasWithState(
-                apply_ewma_state,
-                outputStructType=EWMA_OUT,
-                stateStructType=EWMA_STATE,
-                outputMode="update",
-                timeoutConf=GroupStateTimeout.NoTimeout))

@@ -8,12 +8,11 @@ from knowledgebase_processor_spark import kg_job
 from knowledgebase_processor_spark.operators.graph_query import (
     ask, count_triples, list_graphs, match_bgp,
 )
-from knowledgebase_processor_spark.sources.web_pages import fixture_pages
 from knowledgebase_processor_spark.uris import KB, RDF
 
 
-def test_kg_job_end_to_end_and_resume(spark, tmp_path):
-    pages = fixture_pages(spark).limit(15)
+def test_kg_job_end_to_end_and_resume(spark, kg_pages, tmp_path):
+    pages = kg_pages.limit(15)
     work = str(tmp_path / "run")
     alias = {"Test Document": ("organization", ["document"])}
 
@@ -24,15 +23,58 @@ def test_kg_job_end_to_end_and_resume(spark, tmp_path):
     lin = spark.read.parquet(os.path.join(work, "lineage_extract"))
     assert lin.agg(F.sum("n_rows")).collect()[0][0] == m1["n_entities"]
 
-    # resume: second run reuses every checkpoint -> same metrics, and the
-    # merge upsert is idempotent
+    # resume: second run reuses every checkpoint -> same metrics, no
+    # checkpoint rewritten, and the merge upsert is idempotent
+    marks = _success_mtimes(work)
+    assert {"entities", "lineage_extract", "mention_entities", "triples",
+            "canonical"} <= set(marks)
     m2 = kg_job.run(spark, pages, work, alias_dict=alias)
-    assert m2["n_triples"] == m1["n_triples"]
+    assert ({k: v for k, v in m2.items() if k != "wall_s"}
+            == {k: v for k, v in m1.items() if k != "wall_s"})
+    assert _success_mtimes(work) == marks
     assert spark.read.parquet(os.path.join(work, "kg_triples")).count() == m1["n_triples"]
 
 
-def test_graph_queries_over_kg(spark, tmp_path):
-    pages = fixture_pages(spark).limit(20)
+def _success_mtimes(work):
+    """Stage -> _SUCCESS mtime; ``metrics`` is the run log every run
+    appends to, not a checkpoint."""
+    return {d: os.path.getmtime(os.path.join(work, d, "_SUCCESS"))
+            for d in os.listdir(work)
+            if d != "metrics" and os.path.exists(os.path.join(work, d, "_SUCCESS"))}
+
+
+def test_kg_job_keeps_failing_document_as_error_row(spark, kg_pages, tmp_path,
+                                                    monkeypatch):
+    """A document whose extraction raises becomes one error row of the
+    entities table: counted in lineage_extract.n_errors, and it emits no
+    triple and no canonical entity."""
+    pages = kg_pages.limit(4)
+    victim = pages.select("url").first()[0]
+    real = kg_job.extract_merged_entities_df
+
+    def with_failing_doc(docs, *cols):
+        # a null path makes title derivation raise inside the worker loop
+        return real(docs.withColumn("path", F.when(
+            F.col("doc_id") == victim, F.lit(None)).otherwise(F.col("path"))), *cols)
+    monkeypatch.setattr(kg_job, "extract_merged_entities_df", with_failing_doc)
+
+    work = str(tmp_path / "run_err")
+    kg_job.run(spark, pages, work)
+    ents = spark.read.parquet(os.path.join(work, "entities"))
+    errors = ents.filter(F.col("kind") == "error").collect()
+    assert [(r.kb_id, r.source_document_uri) for r in errors] == [(victim, victim)]
+    assert errors[0].text[0].startswith("AttributeError: ")
+    lin = spark.read.parquet(os.path.join(work, "lineage_extract"))
+    assert lin.agg(F.sum("n_errors")).first()[0] == 1
+    for table, col in (("kg_triples", "source_doc"),
+                       ("canonical", "source_document_uri")):
+        df = spark.read.parquet(os.path.join(work, table))
+        assert df.filter(F.col(col) == victim).count() == 0
+        assert df.count() > 0
+
+
+def test_graph_queries_over_kg(spark, kg_pages, tmp_path):
+    pages = kg_pages.limit(20)
     work = str(tmp_path / "run2")
     kg_job.run(spark, pages, work)
     triples = spark.read.parquet(os.path.join(work, "kg_triples"))
@@ -85,9 +127,9 @@ def test_graph_queries_over_kg(spark, tmp_path):
     assert len(types) == len({r.subj for r in types})
 
 
-def test_kg_job_openie_stage(spark, tmp_path):
+def test_kg_job_openie_stage(spark, kg_pages, tmp_path):
     docs_md = "Ada Lovelace wrote Notes on the Analytical Engine"
-    pages = fixture_pages(spark).limit(5).withColumn(
+    pages = kg_pages.limit(5).withColumn(
         "text", F.concat(F.col("text"), F.lit("\n\n" + docs_md)))
     work = str(tmp_path / "run_oie")
     m = kg_job.run(spark, pages, work, openie=True)
@@ -311,11 +353,11 @@ def test_sparql_select_aggregates(spark):
     assert got == ["u:d2"]
 
 
-def test_kg_job_dedup_stage(spark, tmp_path):
+def test_kg_job_dedup_stage(spark, kg_pages, tmp_path):
     """Stage 0 corpus dedup: duplicate pages are dropped before
     extraction (fewer entities/triples than the undeduped run), the
     keep-list checkpoint resumes, and metrics report in/kept counts."""
-    base = fixture_pages(spark).limit(6)
+    base = kg_pages.limit(6)
     dup = base.withColumn("url", F.concat(F.col("url"), F.lit("?recrawl=1")))
     pages = base.unionByName(dup)     # every page crawled twice
     work = str(tmp_path / "run_dedup")
@@ -328,8 +370,8 @@ def test_kg_job_dedup_stage(spark, tmp_path):
     assert m2["n_pages_kept"] == 6 and m2["n_triples"] == m["n_triples"]
 
 
-def test_kg_job_canonical_rewrite_and_entailment_stages(spark, tmp_path):
-    pages = fixture_pages(spark).limit(12)
+def test_kg_job_canonical_rewrite_and_entailment_stages(spark, kg_pages, tmp_path):
+    pages = kg_pages.limit(12)
     work = str(tmp_path / "run_canon")
     alias = {"Test Document": ("organization", ["document"])}
     m = kg_job.run(spark, pages, work, alias_dict=alias,
@@ -361,8 +403,8 @@ def test_kg_job_canonical_rewrite_and_entailment_stages(spark, tmp_path):
     assert m2["n_entailed"] == m["n_entailed"]
 
 
-def test_kg_job_url_redirect_stage(spark, tmp_path):
-    pages = fixture_pages(spark).limit(6)
+def test_kg_job_url_redirect_stage(spark, kg_pages, tmp_path):
+    pages = kg_pages.limit(6)
     urls = [r.url for r in pages.select("url").collect()]
     # alias url 0 -> chain -> url 1; a loop pair stays untouched
     redirects = spark.createDataFrame(
@@ -389,8 +431,8 @@ def test_kg_job_url_redirect_stage(spark, tmp_path):
     assert m2["n_redirects_resolved"] == 2
 
 
-def test_kg_job_without_redirects_unchanged(spark, tmp_path):
-    pages = fixture_pages(spark).limit(4)
+def test_kg_job_without_redirects_unchanged(spark, kg_pages, tmp_path):
+    pages = kg_pages.limit(4)
     a = kg_job.run(spark, pages, str(tmp_path / "a"))
     b = kg_job.run(spark, pages, str(tmp_path / "b"),
                    url_redirects=spark.createDataFrame(
@@ -399,8 +441,8 @@ def test_kg_job_without_redirects_unchanged(spark, tmp_path):
     assert b["n_redirects_resolved"] == 0
 
 
-def test_kg_job_ifp_canonical_stage(spark, tmp_path):
-    pages = fixture_pages(spark).limit(8)
+def test_kg_job_ifp_canonical_stage(spark, kg_pages, tmp_path):
+    pages = kg_pages.limit(8)
     work = str(tmp_path / "run_ifp")
     m = kg_job.run(spark, pages, work, ifp_canonical=True)
     assert "n_ifp_triples" in m
@@ -412,10 +454,10 @@ def test_kg_job_ifp_canonical_stage(spark, tmp_path):
     assert m2["n_ifp_triples"] == m["n_ifp_triples"]
 
 
-def test_kg_job_rule_completion_stage(spark, tmp_path):
+def test_kg_job_rule_completion_stage(spark, kg_pages, tmp_path):
     from knowledgebase_processor_spark import kg_job
 
-    pages = fixture_pages(spark).limit(12)
+    pages = kg_pages.limit(12)
     wd = str(tmp_path / "rulejob")
     m = kg_job.run(spark, pages, wd, rule_completion=True,
                    rule_min_support=1, rule_min_conf_ppm=100000)

@@ -305,9 +305,49 @@ def test_merged_equals_shuffle_dedup(spark):
     ents = extract_entities_df(docs)
     def key(r):
         return (r.subj, r.pred, r.obj, r.obj_is_uri, r.obj_datatype)
-    a = {key(r) for r in triples_from_entities(ents, dedup=True).collect()}
+    a = {key(r) for r in triples_from_entities(ents).collect()}
     b = {key(r) for r in triples_from_merged(ents).collect()}
     assert a == b
+
+
+def test_extract_batches_emit_one_error_row_per_failing_doc(monkeypatch):
+    """The shared batch loop isolates a raising document on both paths:
+    one ``error`` row carrying its id and ``Type: message``, and every
+    other document's rows exactly as an unpatched run gives them."""
+    import pandas as pd
+
+    from knowledgebase_processor_spark.operators import extract_udf
+    batch = pd.DataFrame({"doc_id": ["d1", "bad", "d2"],
+                          "text": ["# A\n- [ ] t\n[[X]]\n", "# B\n", "> q\n"]})
+
+    def run(merge):
+        out = list(extract_udf.extract_batches(
+            iter([batch]), "doc_id", "text", None, None, merge=merge))
+        assert len(out) == 1
+        return out[0]
+
+    for merge, name in ((False, "extract_entities"),
+                        (True, "extract_entities_merged")):
+        clean = run(merge)
+        real = getattr(extract_udf, name)
+
+        def flaky(doc_id, *args, _real=real):
+            if doc_id == "bad":
+                raise RuntimeError("boom")
+            return _real(doc_id, *args)
+        monkeypatch.setattr(extract_udf, name, flaky)
+        got = run(merge)
+        monkeypatch.undo()
+
+        errors = got[got["kind"] == "error"]
+        assert len(errors) == 1
+        err = errors.iloc[0]
+        assert err["kb_id"] == err["source_document_uri"] == "bad"
+        assert (list(err["text"]) if merge else [err["text"]]) == ["RuntimeError: boom"]
+        kept = got[got["kind"] != "error"].reset_index(drop=True)
+        want = clean[clean["source_document_uri"] != "bad"].reset_index(drop=True)
+        assert len(want) > 0
+        pd.testing.assert_frame_equal(kept, want)
 
 
 def test_skew_utilities(spark):

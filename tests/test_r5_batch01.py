@@ -293,7 +293,7 @@ def test_lm_screen_stream_equals_batch(spark, tmp_path):
     assert flagged["empty"]["avg_nll_micro"] is None   # token-less: flagged
 
 
-def test_kg_job_export_formats_and_resume(spark, tmp_path):
+def test_kg_job_export_formats_and_resume(spark, kg_pages, tmp_path):
     """kg_job(export_formats=...) writes all three reference download
     formats (turtle | json-ld | xml) as per-doc payload tables with the
     standard checkpoint/resume contract, and the three serializations
@@ -304,10 +304,8 @@ def test_kg_job_export_formats_and_resume(spark, tmp_path):
     from knowledgebase_processor_spark.goldens import parse_turtle
     from knowledgebase_processor_spark.sinks_rdf import (
         parse_jsonld, parse_rdfxml)
-    from knowledgebase_processor_spark.sources.web_pages import (
-        fixture_pages)
 
-    pages = fixture_pages(spark).limit(6)
+    pages = kg_pages.limit(6)
     work = str(tmp_path / "run")
     fmts = ("turtle", "json-ld", "xml")
     m1 = kg_job.run(spark, pages, work, export_formats=fmts)
@@ -338,10 +336,14 @@ def test_kg_job_export_formats_and_resume(spark, tmp_path):
         assert os.path.getmtime(os.path.join(work, f, "_SUCCESS")) == t
         assert m2[f"n_{f}"] == m1[f"n_{f}"]
 
-    # unknown format fails loudly
+    # unknown format fails loudly, before any stage is written
     import pytest as _pytest
     with _pytest.raises(ValueError, match="unknown export format"):
         kg_job.run(spark, pages, work, export_formats=("n3",))
+    bad = tmp_path / "bad"
+    with _pytest.raises(ValueError, match="unknown export format"):
+        kg_job.run(spark, pages, str(bad), export_formats=("turtle", "n3"))
+    assert not bad.exists() or not any(bad.iterdir())
 
 
 def test_kn_ppl_bucket_assign_production_shape(spark):

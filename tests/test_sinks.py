@@ -42,7 +42,10 @@ def test_bucketed_partitioning(spark, tmp_path):
 
 def test_lineage_rows(spark):
     df = _rows(spark, ["a", "b"]).repartition(2)
-    lin = sinks.lineage(df, stage="test").collect()
+    lin = sinks.lineage(df, stage="test")
+    assert set(lin.columns) == {"partition_id", "key_min", "key_max",
+                                "n_rows", "n_errors", "stage"}
+    lin = lin.collect()
     assert sum(r["n_rows"] for r in lin) == 6
     assert all(r["stage"] == "test" for r in lin)
 
@@ -55,13 +58,38 @@ def test_checkpoint_stage_resumes_without_recompute(spark, tmp_path):
         calls["n"] += 1
         return _rows(spark, ["a"])
 
-    out1 = sinks.checkpoint_stage(expensive(), path, spark)
+    out1 = sinks.checkpoint_stage(expensive, path, spark)
     assert out1.count() == 3 and calls["n"] == 1
-    # second run: the stage input is NOT recomputed — reads the checkpoint
-    out2 = sinks.checkpoint_stage(
-        spark.createDataFrame([], "source_doc string, subj string, n int"),
-        path, spark)
-    assert out2.count() == 3
+    # second run: the build callable is NOT called — reads the checkpoint
+    out2 = sinks.checkpoint_stage(expensive, path, spark)
+    assert out2.count() == 3 and calls["n"] == 1
+    # force rebuilds
+    sinks.checkpoint_stage(expensive, path, spark, force=True)
+    assert calls["n"] == 2
+
+    # bucket_key: url-hash partitioned table, read back with its bucket
+    bpath = str(tmp_path / "bucketed")
+    out = sinks.checkpoint_stage(lambda: _rows(spark, ["a", "b"]), bpath,
+                                 spark, bucket_key="source_doc")
+    assert out.count() == 6 and "part_bucket" in out.columns
+    assert any(p.startswith("part_bucket=") for p in os.listdir(bpath))
+    assert os.path.exists(os.path.join(bpath, "_SUCCESS"))
+
+
+def test_merge_upsert_leaves_session_overwrite_mode_static(spark, tmp_path):
+    """merge_upsert's dynamic partition overwrite must not leak into the
+    session: a later full overwrite of a partitioned table replaces every
+    bucket, not only the ones it writes."""
+    path = str(tmp_path / "t")
+    sinks.merge_upsert(spark, _rows(spark, ["a", "b"]), path, n_buckets=4)
+    sinks.merge_upsert(spark, _rows(spark, ["a"]), path, n_buckets=4)
+    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode").lower() == "static"
+
+    other = str(tmp_path / "o")
+    sinks.write_bucketed(_rows(spark, list("abcdefgh")), other, n_buckets=8)
+    sinks.write_bucketed(_rows(spark, ["a"]), other, n_buckets=8)
+    docs = {r[0] for r in spark.read.parquet(other).select("source_doc").distinct().collect()}
+    assert docs == {"a"}
 
 
 def test_metrics_roundtrip(spark, tmp_path):

@@ -22,7 +22,7 @@ collapse at ``dropDuplicates`` time and their differing position fields
 become multi-valued properties — the golden TTLs depend on both effects.
 
 This module is pure Python (plus the vendored markdown-it-py) so it can run
-inside an Arrow-batched ``mapInPandas`` UDF; no Spark imports here.
+inside an Arrow-batched ``mapInArrow`` UDF; no Spark imports here.
 """
 
 from __future__ import annotations

@@ -19,6 +19,7 @@ normalized child tables:
 
 from __future__ import annotations
 
+import functools
 import re
 from typing import Iterator
 
@@ -81,12 +82,11 @@ def _coerce_tags(value) -> list[str]:
     return []
 
 
-def _yaml_load_no_alias(raw: str):
-    """yaml.safe_load with aliases forbidden: a 400-byte billion-laughs
-    block expands to gigabytes under plain safe_load and OOMs the
-    executor.  Shared by BOTH frontmatter parse paths (extractor-style
-    `_parse_frontmatter` and reader-style `_reader_frontmatter`) so the
-    title-derivation path is equally inert to alias bombs."""
+@functools.cache
+def _no_alias_loader():
+    """The SafeLoader subclass, built once per process: a class is a
+    reference cycle, so building one per document would leave garbage
+    for the cyclic GC, which the extraction batch pauses."""
     import yaml
 
     class _NoAliasLoader(yaml.SafeLoader):
@@ -95,7 +95,18 @@ def _yaml_load_no_alias(raw: str):
                 raise yaml.YAMLError("aliases disallowed")
             return super().compose_node(parent, index)
 
-    return yaml.load(raw, Loader=_NoAliasLoader)
+    return _NoAliasLoader
+
+
+def _yaml_load_no_alias(raw: str):
+    """yaml.safe_load with aliases forbidden: a 400-byte billion-laughs
+    block expands to gigabytes under plain safe_load and OOMs the
+    executor.  Shared by BOTH frontmatter parse paths (extractor-style
+    `_parse_frontmatter` and reader-style `_reader_frontmatter`) so the
+    title-derivation path is equally inert to alias bombs."""
+    import yaml
+
+    return yaml.load(raw, Loader=_no_alias_loader())
 
 
 def _parse_frontmatter(text: str) -> tuple[dict, str, str | None]:

@@ -282,18 +282,17 @@ def ivf_train(vecs: DataFrame, k_cells: int = 8, iters: int = 2,
     from .kmeans import assign_clusters, quantize, update_centroids
 
     # Seed from the k_cells smallest-id rows with a USABLE embedding:
-    # a NULL vector (or one with a NULL element) would make quantize
-    # yield NULL/null-element qv and the int() comprehension below
-    # iterate None (round-4 ADVICE).  Such rows still get ASSIGNED
-    # later (the kernel gives them the NULL/-1 sentinel) — they are
-    # only excluded as seeds.
-    usable = vecs.filter(
-        F.col(vec_col).isNotNull() &
-        ~F.exists(F.col(vec_col), lambda x: x.isNull()))
-    init = (usable.orderBy(id_col).limit(k_cells)
-            .select(F.col(id_col).alias("vec_id"),
-                    F.col(vec_col).alias("v"),
-                    quantize(F.col(vec_col)).alias("qv"))
+    # a NULL vector, or one with a NULL, NaN or +-inf element, quantizes
+    # to a NULL/null-element qv that the int() comprehension below cannot
+    # take, so the filter runs on qv itself.  Such rows still get
+    # ASSIGNED later (the kernel gives them the NULL/-1 sentinel) — they
+    # are only excluded as seeds.
+    init = (vecs.select(F.col(id_col).alias("vec_id"),
+                        F.col(vec_col).alias("v"),
+                        quantize(F.col(vec_col)).alias("qv"))
+            .filter(F.col("qv").isNotNull() &
+                    ~F.exists("qv", lambda x: x.isNull()))
+            .orderBy("vec_id").limit(k_cells)
             .collect())
     assert len(init) <= k_cells  # bounded: LIMIT k_cells
     if not init:

@@ -5,7 +5,7 @@ Spark shape of the reference's two-phase batch pipeline
 
   phase 1 (register)  -> the documents DataFrame itself is the registry;
                          a 3-key dimension is derived for wikilink joins
-  phase 2 (per doc)   -> mapInPandas extraction -> entities DF
+  phase 2 (per doc)   -> mapInArrow extraction -> entities DF
                          -> triple emission (pure SQL) -> dedup
 
 The only cross-document dependency is wikilink resolution, which the
@@ -45,26 +45,16 @@ def session(app: str = "kgp-spark", cpus: int | None = None,
             missing + ([existing] if existing else []))
 
     cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    # Shuffle/spill to tmpfs when available: local-mode shuffle writes from
-    # 32 concurrent tasks contend on disk; a real cluster spreads them over
-    # per-executor local SSDs.
-    local_dir = None
-    for cand in ("/dev/shm", "/tmp"):
-        if os.path.isdir(cand):
-            local_dir = os.path.join(cand, "kgp-spark-local")
-            os.makedirs(local_dir, exist_ok=True)
-            break
     b = (
         SparkSession.builder.appName(app)
         .master(f"local[{cpus}]")
-        .config("spark.local.dir", local_dir or "/tmp")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # rows-AND-bytes bounded Arrow batches: 8192 rows amortizes per-batch
-        # pandas/Arrow conversion for small docs; the bytes cap only exists
+        # Arrow conversion for small docs; the bytes cap only exists
         # to keep pathological pages (multi-MB texts) from inflating
         # executor memory.  Measured on the 158k-page corpus at pinned
         # local[32]: 16MB throttles normal ~10KB-page batches (-24%
@@ -81,6 +71,17 @@ def session(app: str = "kgp-spark", cpus: int | None = None,
                                f"{min(max(8, 2 * cpus), 64)}g"))
         .config("spark.ui.enabled", "false")
     )
+    # Shuffle/spill to tmpfs when available: local-mode shuffle writes from
+    # 32 concurrent tasks contend on disk; a real cluster spreads them over
+    # per-executor local SSDs.  SPARK_LOCAL_DIRS overrides spark.local.dir,
+    # so when it is set the session makes and sets no local dir of its own.
+    if not os.environ.get("SPARK_LOCAL_DIRS"):
+        for cand in ("/dev/shm", "/tmp"):
+            if os.path.isdir(cand):
+                local_dir = os.path.join(cand, "kgp-spark-local")
+                os.makedirs(local_dir, exist_ok=True)
+                b.config("spark.local.dir", local_dir)
+                break
     return b.getOrCreate()
 
 
@@ -94,7 +95,7 @@ def documents_to_triples(docs: DataFrame,
 
     Duplicate KG nodes are always document-scoped (uris.py), so the dedup
     merge happens inside the extraction UDF per document and the whole
-    pipeline is SHUFFLE-FREE: scan -> mapInPandas -> broadcast join
+    pipeline is SHUFFLE-FREE: scan -> mapInArrow -> broadcast join
     (wikilinks) -> explode.  rdflib's corpus-wide triple-set dedup falls
     out with zero exchanges.
     """

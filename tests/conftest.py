@@ -19,21 +19,27 @@ def spark():
 
 
 @pytest.fixture(scope="session")
-def kg_pages(spark):
+def note_corpus():
+    """The benchmark's seeded markdown-note generator, loaded by file
+    path: ``perfbench`` is not part of the shipped package."""
+    spec = importlib.util.spec_from_file_location(
+        "_perfbench_corpus", os.path.join(ROOT, "perfbench", "corpus.py"))
+    corpus = sys.modules[spec.name] = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(corpus)
+    return corpus
+
+
+@pytest.fixture(scope="session")
+def kg_pages(spark, note_corpus):
     """web_pages rows for the kg_job tests: the reference fixture pages
     when the reference specs are present, else 24 seeded notes from the
-    benchmark's markdown generator (loaded by file path: ``perfbench`` is
-    not part of the shipped package)."""
+    benchmark's markdown generator."""
     from knowledgebase_processor_spark.goldens import SPECS_DIR
     from knowledgebase_processor_spark.sources.web_pages import (
         _EPOCH, _html_wrap, fixture_pages)
     if SPECS_DIR.is_dir():
         return fixture_pages(spark)
-    spec = importlib.util.spec_from_file_location(
-        "_perfbench_corpus", os.path.join(ROOT, "perfbench", "corpus.py"))
-    corpus = sys.modules[spec.name] = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(corpus)
-    notes = corpus.generate(7, 24, sections=2, links_per_para=2)
+    notes = note_corpus.generate(7, 24, sections=2, links_per_para=2)
     rows = [(n.url, _EPOCH + datetime.timedelta(seconds=i),
              _html_wrap(n.text, n.url.rsplit("/", 1)[1]), n.text, "en")
             for i, n in enumerate(notes)]

@@ -315,16 +315,18 @@ def test_extract_batches_emit_one_error_row_per_failing_doc(monkeypatch):
     one ``error`` row carrying its id and ``Type: message``, and every
     other document's rows exactly as an unpatched run gives them."""
     import pandas as pd
+    import pyarrow as pa
 
     from knowledgebase_processor_spark.operators import extract_udf
-    batch = pd.DataFrame({"doc_id": ["d1", "bad", "d2"],
-                          "text": ["# A\n- [ ] t\n[[X]]\n", "# B\n", "> q\n"]})
+    batch = pa.RecordBatch.from_pydict(
+        {"doc_id": ["d1", "bad", "d2"],
+         "text": ["# A\n- [ ] t\n[[X]]\n", "# B\n", "> q\n"]})
 
     def run(merge):
         out = list(extract_udf.extract_batches(
             iter([batch]), "doc_id", "text", None, None, merge=merge))
         assert len(out) == 1
-        return out[0]
+        return out[0].to_pandas()
 
     for merge, name in ((False, "extract_entities"),
                         (True, "extract_entities_merged")):
@@ -349,6 +351,129 @@ def test_extract_batches_emit_one_error_row_per_failing_doc(monkeypatch):
         assert len(want) > 0
         pd.testing.assert_frame_equal(kept, want)
 
+
+
+def _extract_jobs(note_corpus):
+    """(doc_id, text, path, title) rows over generated notes, a third of
+    them hostile (CRLF, BOM, emoji, repeated headings); NULL titles are
+    derived, the rest pass through."""
+    notes = note_corpus.generate(11, 24, sections=3, hostile_share=0.3)
+    texts = [n.text for n in notes]
+    assert any("\r\n" in t and t.startswith("\ufeff") for t in texts)
+    assert not all("\r\n" in t for t in texts)
+    return [(n.url, n.text, n.url.rsplit("/", 1)[1],
+             None if i % 2 else f"Title {i}")
+            for i, n in enumerate(notes)]
+
+
+def _batches(jobs, size=7):
+    import pyarrow as pa
+    cols = list(zip(*jobs))
+    table = pa.table({"doc_id": pa.array(cols[0], pa.string()),
+                      "text": pa.array(cols[1], pa.string()),
+                      "path": pa.array(cols[2], pa.string()),
+                      "title": pa.array(cols[3], pa.string())})
+    return table.to_batches(max_chunksize=size)
+
+
+def test_extract_batches_arrow_rows_equal_per_doc_extraction(note_corpus):
+    """Both paths emit batches typed exactly by the Spark schema whose
+    rows are the per-document extractor's dicts, in order: None, ints,
+    bools and the ``headers`` lists survive the direct column build."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    from knowledgebase_processor_spark.extract.core import (
+        extract_entities, extract_entities_merged)
+    from knowledgebase_processor_spark.operators.extract_udf import extract_batches
+    from knowledgebase_processor_spark.operators.metadata import derive_title
+    from knowledgebase_processor_spark.schema import ENTITIES, ENTITIES_MERGED
+
+    jobs = _extract_jobs(note_corpus)
+    for merge, schema, extract in (
+            (False, ENTITIES, extract_entities),
+            (True, ENTITIES_MERGED, extract_entities_merged)):
+        out = list(extract_batches(iter(_batches(jobs)), "doc_id", "text",
+                                   "path", "title", merge=merge))
+        assert len(out) == 4
+        assert all(b.schema == to_arrow_schema(schema) for b in out)
+        got = [row for b in out for row in b.to_pylist()]
+        want = [ent for d, t, p, ti in jobs
+                for ent in extract(d, t, p, derive_title(t, p) if ti is None else ti)]
+        assert got == want
+        kinds = {r["kind"] for r in got}
+        assert {"document", "heading", "table", "todo", "wikilink"} <= kinds
+        assert any(r["headers"] for r in got if r["kind"] == "table")
+
+
+def test_extract_batches_make_no_reference_cycles(note_corpus):
+    """The invariant the loop's GC pause relies on: with the cyclic GC
+    off, extracting the generated corpus on both paths, one raising
+    document included, leaves nothing for a collection to free."""
+    import gc
+
+    from knowledgebase_processor_spark.operators.extract_udf import extract_batches
+
+    jobs = _extract_jobs(note_corpus)
+    # a NULL path makes title derivation raise inside the per-doc try
+    jobs[3] = (jobs[3][0], jobs[3][1], None, None)
+    # importing the parser on first use leaves one-time garbage
+    list(extract_batches(iter(_batches(jobs[:1])), "doc_id", "text",
+                         "path", "title", merge=False))
+    was_enabled = gc.isenabled()
+    gc.collect()
+    gc.disable()
+    try:
+        for merge in (False, True):
+            out = list(extract_batches(iter(_batches(jobs)), "doc_id", "text",
+                                       "path", "title", merge=merge))
+            errors = [r for b in out for r in b.to_pylist() if r["kind"] == "error"]
+            assert [r["kb_id"] for r in errors] == [jobs[3][0]]
+            del out, errors
+            assert gc.collect() == 0
+    finally:
+        if was_enabled:
+            gc.enable()
+
+
+def test_extract_batches_restore_gc_state(monkeypatch):
+    """GC is off while a batch is extracted and back in its previous
+    state whenever the loop yields, finishes, or is closed mid-stream."""
+    import gc
+
+    import pyarrow as pa
+
+    from knowledgebase_processor_spark.operators import extract_udf
+
+    during = []
+    real = extract_udf.extract_entities
+
+    def spy(*args):
+        during.append(gc.isenabled())
+        return real(*args)
+    monkeypatch.setattr(extract_udf, "extract_entities", spy)
+    batches = [pa.RecordBatch.from_pydict({"doc_id": [f"d{i}"], "text": ["# A\n"]})
+               for i in range(3)]
+
+    def loop():
+        return extract_udf.extract_batches(iter(batches), "doc_id", "text",
+                                           None, None, merge=False)
+
+    was_enabled = gc.isenabled()
+    try:
+        for start in (False, True):
+            (gc.enable if start else gc.disable)()
+            seen = []
+            for _ in loop():
+                seen.append(gc.isenabled())
+            assert seen == [start] * 3 and gc.isenabled() is start
+            gen = loop()
+            next(gen)
+            assert gc.isenabled() is start
+            gen.close()
+            assert gc.isenabled() is start
+        assert during and not any(during)
+    finally:
+        (gc.enable if was_enabled else gc.disable)()
 
 def test_skew_utilities(spark):
     from knowledgebase_processor_spark.operators.skew import (

@@ -223,7 +223,12 @@ def test_lsh_buckets_null_element_bucket0(spark):
            for r in lsh_buckets_multi(vecs, dim=4, bits=4,
                                       tables=2).collect()}
     assert got[2] == [0, 0] and got[3] == [0, 0]
-    assert got[1] != [0, 0] or True  # real vector computes normally
+    # the real vector computes exactly as it does on its own
+    alone = lsh_buckets_multi(
+        spark.createDataFrame([(1, [1.0, 2.0, 3.0, 4.0])],
+                              "vec_id int, embedding array<double>"),
+        dim=4, bits=4, tables=2).collect()
+    assert got[1] == alone[0]["buckets"]
 
 
 def test_ivf_train_skips_null_embedding_seeds(spark):
@@ -236,6 +241,22 @@ def test_ivf_train_skips_null_embedding_seeds(spark):
     cents, first = ivf_train(vecs, k_cells=2, iters=1)
     assert len(cents) == 2 and all(len(c) == 2 for c in cents)
     assert first == [1.0, 0.0]   # smallest-id USABLE row
+
+
+def test_ivf_train_skips_nan_and_inf_seeds(spark):
+    """A NaN or +-inf element quantizes to a NULL element; such a row is
+    no seed (it used to reach int(None) and raise TypeError)."""
+    from knowledgebase_processor_spark.operators.similarity import (
+        ivf_train)
+    inf = float("inf")
+    vecs = spark.createDataFrame(
+        [(1, [float("nan"), 0.0]), (2, [inf, 1.0]), (3, [0.0, -inf]),
+         (4, [1.0, 0.0]), (5, [0.0, 1.0]), (6, [2.0, 0.0])],
+        "vec_id int, embedding array<double>")
+    cents, first = ivf_train(vecs, k_cells=2, iters=1)
+    assert len(cents) == 2 and all(len(c) == 2 for c in cents)
+    assert all(x == x and abs(x) != inf for c in cents for x in c)
+    assert first == [1.0, 0.0]
 
 
 def test_lm_screen_stream_equals_batch(spark, tmp_path):

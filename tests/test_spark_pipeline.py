@@ -1,6 +1,6 @@
 """End-to-end Spark pipeline vs golden TTLs — the primary correctness gate.
 
-All 66 fixture documents go through ONE DataFrame job (mapInPandas
+All 66 fixture documents go through ONE DataFrame job (mapInArrow
 extraction -> SQL triple emission -> dedup), then per-document triple sets
 are compared against the goldens exactly like the reference's own
 isomorphism tests (tests/test_specifications.py:80-128; set equality
@@ -69,3 +69,49 @@ def test_spark_matches_python_reference_impl(spark, triples_by_doc):
         ents = extract_entities(doc_id, md.read_text(encoding="utf-8"))
         py = entities_triples(ents)
         assert triples_by_doc.get(doc_id, set()) == py, doc_id
+
+
+def test_session_leaves_local_dirs_to_spark_local_dirs(monkeypatch):
+    """SPARK_LOCAL_DIRS overrides spark.local.dir, so with it set the
+    session makes no directory and sets no spark.local.dir; without it
+    the session picks its tmpfs dir."""
+    import os
+    import types
+
+    from knowledgebase_processor_spark import pipeline
+
+    class Builder:
+        def __init__(self):
+            self.conf = {}
+
+        def appName(self, name):
+            return self
+
+        def master(self, master):
+            return self
+
+        def config(self, key, value):
+            self.conf[key] = value
+            return self
+
+        def getOrCreate(self):
+            return self.conf
+
+    def session():
+        monkeypatch.setattr(pipeline, "SparkSession",
+                            types.SimpleNamespace(builder=Builder()))
+        return pipeline.session(cpus=2)
+
+    made = []
+    monkeypatch.setattr(os, "makedirs", lambda path, **kw: made.append(path))
+    monkeypatch.setenv("PYTHONPATH", os.environ.get("PYTHONPATH", ""))
+
+    monkeypatch.setenv("SPARK_LOCAL_DIRS", "/somewhere/spark-local")
+    conf = session()
+    assert "spark.local.dir" not in conf and made == []
+    assert conf["spark.sql.shuffle.partitions"] == "2"
+
+    monkeypatch.delenv("SPARK_LOCAL_DIRS")
+    conf = session()
+    assert made and conf["spark.local.dir"] == made[0]
+    assert made[0].endswith("kgp-spark-local")

@@ -49,7 +49,6 @@ from knowledgebase_processor_spark.operators.textstats import (  # noqa: E402
 from knowledgebase_processor_spark.operators.nglm import (  # noqa: E402
     backoff_lm_oracle_sql as _nglm_oracle,
     kneser_ney_oracle_sql as _kn_oracle,
-    kneser_ney3_oracle_sql as _kn3_oracle,
     kneser_ney_n_oracle_sql as _kn_n_oracle,
     ppl_bucket_assign_oracle_sql as _ppl_assign_oracle,
     ppl_buckets_oracle_sql as _ppl_buckets_oracle,
@@ -4543,37 +4542,38 @@ def _q241_backoff_lm(spark, sf):
 
 
 def _q243_kneser_ney(spark, sf):
-    # Interpolated Kneser-Ney perplexity (operators/nglm.py): the
-    # KenLM-standard smoother beside q241's stupid backoff — fixed
-    # D=0.75, add-one-smoothed continuation probabilities so OOV stays
-    # log-defined, per-token nano quantization.
+    # Bigram interpolated Kneser-Ney perplexity (operators/nglm.py
+    # kneser_ney_n_report, n=2): the KenLM-standard smoother beside
+    # q241's stupid backoff — fixed D=0.75, add-one-smoothed
+    # continuation probabilities so OOV stays log-defined, per-token
+    # nano quantization.  The oracle is the hand-written bigram replay
+    # (kneser_ney_oracle_sql), so the generated ladder's base rung is
+    # checked against an independent spec.
     from knowledgebase_processor_spark.operators.nglm import (
-        kneser_ney_report)
-    return (kneser_ney_report(_t(spark, sf, "documents"))
+        kneser_ney_n_report)
+    return (kneser_ney_n_report(_t(spark, sf, "documents"), n=2)
             .orderBy("doc_id"))
 
 
 def _q244_kneser_ney3(spark, sf):
-    # Trigram interpolated Kneser-Ney (operators/nglm.py): the KenLM
-    # production shape one order short of CCNet's 5-gram.  The bigram
-    # ladder rides inside the trigram rung VERBATIM (literal SQL string
-    # recursion), and each extra order costs exactly two more equi-joins
-    # against bounded count tables — the join pyramid that scales to
-    # 5-gram.  Full DuckDB replay oracle, value-checked at sf0.001 and
-    # sf0.01.
+    # Trigram interpolated Kneser-Ney (operators/nglm.py
+    # kneser_ney_n_report, n=3): the trigram rung interpolates into the
+    # bigram rung's column (nglm.kn_rung_sqls), and each extra order
+    # costs three more equi-joins against bounded count tables — the
+    # join pyramid that scales to 5-gram.  Generated order-n DuckDB
+    # replay oracle (kneser_ney_n_oracle_sql, n=3).
     from knowledgebase_processor_spark.operators.nglm import (
-        kneser_ney3_report)
-    return (kneser_ney3_report(_t(spark, sf, "documents"))
+        kneser_ney_n_report)
+    return (kneser_ney_n_report(_t(spark, sf, "documents"), n=3)
             .orderBy("doc_id"))
 
 
 def _q247_kneser_ney4(spark, sf):
-    # 4-gram interpolated Kneser-Ney from the GENERALIZED order-n
-    # ladder builder (operators/nglm.py kneser_ney_n_report): the rung
-    # SQL and the DuckDB CTE graph are both generated by the same loop
-    # that produced q243 (n=2) and q244 (n=3), demonstrating the join
-    # pyramid extends mechanically to CCNet's 5-gram KenLM.  Full
-    # replay oracle, value-checked at sf0.001 and sf0.01.
+    # 4-gram interpolated Kneser-Ney from the order-n ladder builder
+    # (operators/nglm.py kneser_ney_n_report) that also runs q243 (n=2)
+    # and q244 (n=3): the rung SQL and the DuckDB CTE graph are
+    # generated by the same loop at every order.  Generated replay
+    # oracle (kneser_ney_n_oracle_sql, n=4).
     from knowledgebase_processor_spark.operators.nglm import (
         kneser_ney_n_report)
     return (kneser_ney_n_report(_t(spark, sf, "documents"), n=4)
@@ -4583,12 +4583,10 @@ def _q247_kneser_ney4(spark, sf):
 def _q248_kneser_ney5(spark, sf):
     # 5-gram interpolated Kneser-Ney — KenLM's production order, the
     # model CCNet actually filters with.  Same generated ladder as
-    # q243/q244/q247, now with the round-5 rung-projection form: each
-    # ladder level is projected ONCE and referenced by column name
-    # (nglm.kn_rung_sqls), so the plan holds n-1 rung expressions
-    # instead of the 2^(n-2) verbatim copies the flat expansion carried
-    # (round-4 ADVICE).  Full replay oracle with the identical rung
-    # CTE chain, value-checked at sf0.001 and sf0.01.
+    # q243/q244/q247: each ladder level is projected ONCE and referenced
+    # by column name (nglm.kn_rung_sqls), so the plan holds n-1 rung
+    # expressions.  Generated replay oracle with the identical rung CTE
+    # chain (kneser_ney_n_oracle_sql, n=5).
     from knowledgebase_processor_spark.operators.nglm import (
         kneser_ney_n_report)
     return (kneser_ney_n_report(_t(spark, sf, "documents"), n=5)
@@ -9312,7 +9310,7 @@ def oracle_sql() -> dict[str, str]:
         "q241_backoff_lm": _nglm_oracle("documents"),
         "q242_ppl_buckets": _ppl_buckets_oracle("documents"),
         "q243_kneser_ney": _kn_oracle("documents"),
-        "q244_kneser_ney3": _kn3_oracle("documents"),
+        "q244_kneser_ney3": _kn_n_oracle("documents", 3),
         "q245_ppl_assign": _ppl_assign_oracle("documents",
                                               lang_col="d.lang"),
         "q247_kneser_ney4": _kn_n_oracle("documents", 4),

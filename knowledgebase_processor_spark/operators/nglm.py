@@ -45,36 +45,44 @@ unbounded; N rides along as a 1-row broadcast cross join.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from ..functions.text import portable_words
+
+# The one integer gate of the train/held split, the same regex text on
+# both engines.  `\z`, not `$`: Java's `$` also matches before a final
+# newline ('7\n'), RE2's does not.
+_INT_ID_RE = r"^[+-]?[0-9]+\z"
 
 
 def _split_bucket(col: Column, train_mod: int) -> Column:
     """Train/held split bucket — a pure function of the id under ANY id
-    type (round-4 VERDICT item 1: the old ``cast("long") % train_mod``
-    silently dropped a string/url-keyed corpus to zero rows).
+    type, so a string/url-keyed corpus splits instead of dropping out.
 
-    Numeric-castable ids keep the historical ``id % train_mod``
-    membership (bit-compatible with the round-3/4 oracles and the
-    pinned q246 lineage); everything else falls back to the salted-md5
-    integer bucket of the id's string form — the ``operators/split.py``
-    portable idiom — so a production ``url string`` corpus splits
-    deterministically.  ``7`` and ``'7'`` agree by construction, and a
-    NULL id yields a NULL bucket (dropped from both splits, as before).
+    An id whose string form is a plain integer keeps ``id % train_mod``
+    membership (``7`` and ``'7'`` agree by construction); everything
+    else — and an integer string that overflows BIGINT — takes the
+    salted-md5 integer bucket of the string form, the
+    ``operators/split.py`` portable idiom.  The two engines' casts
+    disagree on '7.5', '7e1' and '0x1F', so only the regex decides.  A
+    NULL id yields a NULL bucket (dropped from both splits).
     """
+    s = col.cast("string")
     h = F.conv(F.substring(
-        F.md5(F.concat(F.lit("lmsplit|"), col.cast("string"))), 1, 15),
-        16, 10).cast("long")
-    return F.coalesce(col.try_cast("long"), h) % train_mod
+        F.md5(F.concat(F.lit("lmsplit|"), s)), 1, 15), 16, 10).cast("long")
+    return F.coalesce(F.when(s.rlike(_INT_ID_RE), s.try_cast("long")),
+                      h) % train_mod
 
 
 def _split_bucket_sql(train_mod: int, id_sql: str = "doc_id") -> str:
-    """The DuckDB replay of :func:`_split_bucket` (same md5 prefix,
-    same TRY_CAST-first rule)."""
-    return (f"COALESCE(TRY_CAST({id_sql} AS BIGINT), "
-            f"('0x' || substr(md5('lmsplit|' || CAST({id_sql} AS "
-            f"VARCHAR)), 1, 15))::BIGINT) % {train_mod}")
+    """The DuckDB replay of :func:`_split_bucket` (same regex gate, same
+    md5 prefix)."""
+    s = f"CAST({id_sql} AS VARCHAR)"
+    return (f"COALESCE(CASE WHEN regexp_matches({s}, '{_INT_ID_RE}') "
+            f"THEN TRY_CAST({s} AS BIGINT) END, "
+            f"('0x' || substr(md5('lmsplit|' || {s}), 1, 15))::BIGINT)"
+            f" % {train_mod}")
+
 
 ALPHA = "0.4"
 
@@ -124,6 +132,113 @@ def _tokens(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
                                                  F.lit(""))).alias("ws"))
 
 
+def _split(docs: DataFrame, id_col: str, text_col: str, train_mod: int,
+           score_all: bool = False) -> tuple[DataFrame, DataFrame]:
+    """(train, held) tokenized frames: train on bucket != 0, score
+    bucket 0 — or every document with ``score_all`` (the CCNet filter
+    shape)."""
+    base = _tokens(docs, id_col, text_col)
+    sb = _split_bucket(F.col("doc_id"), train_mod)
+    return base.filter(sb != 0), (base if score_all
+                                  else base.filter(sb == 0))
+
+
+def _positions(held: DataFrame, k: int) -> DataFrame:
+    """(doc_id, pos, w, p1..pk): one row per held-out token with its k
+    preceding words (NULL before the document start).  A token-less
+    document keeps one row with a NULL pos, so it still reports."""
+    return held.select(
+        "doc_id",
+        F.posexplode_outer("ws").alias("pos", "w"),
+        F.col("ws").alias("_ws"),
+    ).select("doc_id", "pos", "w",
+             *[F.expr(f"CASE WHEN pos >= {i} THEN _ws[pos - {i}] END")
+               .alias(f"p{i}") for i in range(1, k + 1)])
+
+
+def _per_doc_nll(j: DataFrame, tok_nano_sql: str) -> DataFrame:
+    """Score each position with ``tok_nano_sql`` and sum per document
+    -> (doc_id, n_tokens, nll_nano, avg_nll_micro)."""
+    scored = j.withColumn(
+        "tok_nano",
+        F.when(F.col("pos").isNull(), None)      # empty doc placeholder
+        .otherwise(F.expr(tok_nano_sql)))
+    agg = scored.groupBy("doc_id").agg(
+        F.count("tok_nano").cast("long").alias("n_tokens"),
+        F.sum("tok_nano").alias("nll_nano"))
+    return agg.selectExpr(
+        "doc_id", "n_tokens", "nll_nano",
+        "CASE WHEN n_tokens = 0 THEN NULL "
+        "ELSE CAST(round(nll_nano / (1000.0 * n_tokens)) AS BIGINT) END"
+        " AS avg_nll_micro")
+
+
+def _lang_ntile(rep: DataFrame, docs: DataFrame, id_col: str,
+                lang_col: str | None, buckets: int) -> DataFrame:
+    """Per-language ntile of an LM report on (avg_nll_micro, doc_id)
+    -> (doc_id, lang, avg_nll_micro, bucket); bucket 1 = head.
+    Token-less documents get no row (no perplexity).  ``lang_col=None``
+    ranks the whole corpus as one language, 'all'."""
+    lang = docs.select(
+        F.col(id_col).alias("doc_id"),
+        (F.col(lang_col) if lang_col else F.lit("all")).alias("lang"))
+    j = rep.filter(F.col("n_tokens") > 0).join(lang, "doc_id")
+    w = Window.partitionBy("lang").orderBy("avg_nll_micro", "doc_id")
+    return j.select("doc_id", "lang", "avg_nll_micro",
+                    F.ntile(buckets).over(w).cast("int").alias("bucket"))
+
+
+# --- DuckDB oracle fragments (shared among the oracles only) ---------------
+
+def _split_oracle_ctes(docs_sql: str, train_mod: int,
+                       score_all: bool) -> str:
+    """The ``base``/``train``/``held`` CTEs: the portable tokenizer and
+    the :func:`_split_bucket_sql` split (``score_all`` holds out every
+    document)."""
+    ws = (r"list_filter(string_split_regex(lower(trim(text)),"
+          r" '[ \t\n\r\f]+'), w -> w <> '')")
+    held = ("SELECT doc_id, ws FROM base" if score_all else
+            "SELECT doc_id, ws FROM base WHERE sb = 0")
+    return f"""base AS (
+          SELECT doc_id, {ws} AS ws, {_split_bucket_sql(train_mod)} AS sb
+          FROM {docs_sql}),
+        train AS (SELECT doc_id, ws FROM base WHERE sb <> 0),
+        held AS ({held})"""
+
+
+# per-doc tail over a ``scored (doc_id, tok_nano)`` CTE: every held doc
+# reports, token-less ones with n_tokens = 0
+_PER_DOC_NLL_SQL = """agg AS (
+          SELECT h.doc_id,
+                 COUNT(s.tok_nano) AS n_tokens,
+                 SUM(s.tok_nano) AS nll_nano
+          FROM held h LEFT JOIN scored s USING (doc_id)
+          GROUP BY h.doc_id)
+        SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
+               CAST(nll_nano AS BIGINT) AS nll_nano,
+               CASE WHEN n_tokens = 0 THEN NULL
+                    ELSE CAST(round(nll_nano / (1000.0 * n_tokens))
+                         AS BIGINT) END AS avg_nll_micro
+        FROM agg ORDER BY doc_id"""
+
+
+def _lang_ntile_oracle_sql(rep_sql: str, docs_sql: str,
+                           lang_col: str | None, buckets: int) -> str:
+    """DuckDB replay of :func:`_lang_ntile` over an LM-report query."""
+    lang = lang_col if lang_col else "'all'"
+    return f"""
+        WITH rep AS ({rep_sql}),
+        j AS (
+          SELECT r.doc_id, r.avg_nll_micro, {lang} AS lang
+          FROM rep r JOIN {docs_sql} d
+            ON r.doc_id = d.doc_id
+          WHERE r.n_tokens > 0)
+        SELECT doc_id, lang, avg_nll_micro,
+               CAST(NTILE({buckets}) OVER (PARTITION BY lang
+                 ORDER BY avg_nll_micro, doc_id) AS INT) AS bucket
+        FROM j ORDER BY doc_id"""
+
+
 def backoff_lm_report(docs: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text",
                       train_mod: int = 5) -> DataFrame:
@@ -135,11 +250,8 @@ def backoff_lm_report(docs: DataFrame, id_col: str = "doc_id",
     (NULL for token-less docs).  Lower = more fluent under the trained
     model — the CCNet filtering signal.
     """
-    base = _tokens(docs, id_col, text_col)
-    sb = _split_bucket(F.col("doc_id"), train_mod)
-    train = base.filter(sb != 0)
-    held = base.filter(sb == 0)
-    return backoff_lm_score_tokens(train, held)
+    return backoff_lm_score_tokens(*_split(docs, id_col, text_col,
+                                           train_mod))
 
 
 def backoff_lm_score(train_docs: DataFrame, score_docs: DataFrame,
@@ -187,20 +299,8 @@ def backoff_lm_score_with_model(model: dict[str, DataFrame],
     shared ladder SQL as the one-shot path (bit-identical by
     construction; the stream/batch equivalence test pins it)."""
     uni, bi, tri = model["uni"], model["bi"], model["tri"]
-    n_train = model["n_train"]
-
-    pos_rows = held.select(
-        "doc_id",
-        F.posexplode_outer("ws").alias("pos", "w"),
-        F.col("ws").alias("_ws"),
-    ).select(
-        "doc_id", "pos", "w",
-        F.expr("CASE WHEN pos >= 1 THEN _ws[pos - 1] END").alias("p1"),
-        F.expr("CASE WHEN pos >= 2 THEN _ws[pos - 2] END").alias("p2"),
-    )
-
-    j = (pos_rows
-         .join(F.broadcast(n_train))
+    j = (_positions(held, 2)
+         .join(F.broadcast(model["n_train"]))
          .join(tri.select(F.col("gram").alias("_g3"),
                           F.col("c").alias("_c3")),
                F.concat_ws(" ", "p2", "p1", "w") == F.col("_g3"), "left")
@@ -223,20 +323,7 @@ def backoff_lm_score_with_model(model: dict[str, DataFrame],
              F.coalesce("_c2", F.lit(0)).alias("c2"),
              F.coalesce("_c1prev", F.lit(0)).alias("c1prev"),
              F.coalesce("_c1", F.lit(0)).alias("c1")))
-
-    scored = j.withColumn(
-        "tok_nano",
-        F.when(F.col("pos").isNull(), None)      # empty doc placeholder
-        .otherwise(F.expr(TOKEN_NLL_NANO_SQL)))
-
-    agg = scored.groupBy("doc_id").agg(
-        F.count("tok_nano").cast("long").alias("n_tokens"),
-        F.sum("tok_nano").alias("nll_nano"))
-    return agg.selectExpr(
-        "doc_id", "n_tokens", "nll_nano",
-        "CASE WHEN n_tokens = 0 THEN NULL "
-        "ELSE CAST(round(nll_nano / (1000.0 * n_tokens)) AS BIGINT) END"
-        " AS avg_nll_micro")
+    return _per_doc_nll(j, TOKEN_NLL_NANO_SQL)
 
 
 def backoff_lm_oracle_sql(docs_sql: str, train_mod: int = 5,
@@ -247,17 +334,8 @@ def backoff_lm_oracle_sql(docs_sql: str, train_mod: int = 5,
     on both engines.  ``score_all`` scores EVERY document against the
     split-trained model (the CCNet filter shape) instead of only the
     held-out split."""
-    ws = (r"list_filter(string_split_regex(lower(trim(text)),"
-          r" '[ \t\n\r\f]+'), w -> w <> '')")
-    sb = _split_bucket_sql(train_mod)
-    held = ("SELECT doc_id, ws FROM base" if score_all else
-            "SELECT doc_id, ws FROM base WHERE sb = 0")
     return f"""
-        WITH base AS (
-          SELECT doc_id, {ws} AS ws, {sb} AS sb
-          FROM {docs_sql}),
-        train AS (SELECT doc_id, ws FROM base WHERE sb <> 0),
-        held AS ({held}),
+        WITH {_split_oracle_ctes(docs_sql, train_mod, score_all)},
         n_tr AS (SELECT COALESCE(SUM(len(ws)), 0) AS n_train FROM train),
         uni AS (
           SELECT w AS gram, COUNT(*) AS c
@@ -301,18 +379,7 @@ def backoff_lm_oracle_sql(docs_sql: str, train_mod: int = 5,
           LEFT JOIN uni u1 ON r.w = u1.gram),
         scored AS (
           SELECT doc_id, {TOKEN_NLL_NANO_SQL} AS tok_nano FROM joined),
-        agg AS (
-          SELECT h.doc_id,
-                 COUNT(s.tok_nano) AS n_tokens,
-                 SUM(s.tok_nano) AS nll_nano
-          FROM held h LEFT JOIN scored s USING (doc_id)
-          GROUP BY h.doc_id)
-        SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-               CAST(nll_nano AS BIGINT) AS nll_nano,
-               CASE WHEN n_tokens = 0 THEN NULL
-                    ELSE CAST(round(nll_nano / (1000.0 * n_tokens))
-                         AS BIGINT) END AS avg_nll_micro
-        FROM agg ORDER BY doc_id"""
+        {_PER_DOC_NLL_SQL}"""
 
 
 def ppl_buckets(docs: DataFrame, id_col: str = "doc_id",
@@ -329,14 +396,8 @@ def ppl_buckets(docs: DataFrame, id_col: str = "doc_id",
     per language (spillable sort, partitioned by lang), one partial-agg
     groupBy.  Token-less documents are excluded (no perplexity).
     """
-    from pyspark.sql import Window
-
     rep = backoff_lm_report(docs, id_col, text_col, train_mod)
-    langs = docs.select(F.col(id_col).alias("doc_id"),
-                        F.col(lang_col).alias("lang"))
-    j = rep.filter(F.col("n_tokens") > 0).join(langs, "doc_id")
-    w = Window.partitionBy("lang").orderBy("avg_nll_micro", "doc_id")
-    return (j.withColumn("bucket", F.ntile(buckets).over(w))
+    return (_lang_ntile(rep, docs, id_col, lang_col, buckets)
             .groupBy("lang", "bucket")
             .agg(F.count("*").alias("n_docs"),
                  F.min("avg_nll_micro").alias("min_nll_micro"),
@@ -346,28 +407,17 @@ def ppl_buckets(docs: DataFrame, id_col: str = "doc_id",
 
 def ppl_buckets_oracle_sql(docs_sql: str, train_mod: int = 5,
                            buckets: int = 3) -> str:
-    """DuckDB replay: the LM-report oracle as a CTE, identical NTILE
-    ordering (avg_nll_micro, doc_id), exact-integer aggregates."""
-    rep = backoff_lm_oracle_sql(docs_sql, train_mod)
+    """DuckDB replay: the per-language ntile of the LM-report oracle,
+    exact-integer aggregates per bucket."""
+    b = _lang_ntile_oracle_sql(backoff_lm_oracle_sql(docs_sql, train_mod),
+                               docs_sql, "d.lang", buckets)
     return f"""
-        WITH rep AS ({rep}),
-        j AS (
-          SELECT r.doc_id, r.avg_nll_micro, d.lang
-          FROM rep r JOIN {docs_sql} d
-            ON r.doc_id = d.doc_id
-          WHERE r.n_tokens > 0),
-        b AS (
-          SELECT lang,
-                 NTILE({buckets}) OVER (PARTITION BY lang
-                   ORDER BY avg_nll_micro, doc_id) AS bucket,
-                 avg_nll_micro
-          FROM j)
-        SELECT lang, CAST(bucket AS INT) AS bucket,
+        SELECT lang, bucket,
                COUNT(*) AS n_docs,
                MIN(avg_nll_micro) AS min_nll_micro,
                MAX(avg_nll_micro) AS max_nll_micro,
                SUM(avg_nll_micro) AS sum_nll_micro
-        FROM b GROUP BY lang, bucket
+        FROM ({b}) GROUP BY lang, bucket
         ORDER BY lang, bucket"""
 
 
@@ -386,19 +436,9 @@ def ppl_bucket_assign(docs: DataFrame, id_col: str = "doc_id",
     Plan: the LM join stream + one per-language window rank; the
     filter consumer broadcasts nothing new.
     """
-    from pyspark.sql import Window
-
-    base = _tokens(docs, id_col, text_col)
-    train = base.filter(_split_bucket(F.col("doc_id"), train_mod) != 0)
-    rep = backoff_lm_score_tokens(train, base)
-    lang = docs.select(
-        F.col(id_col).alias("doc_id"),
-        (F.col(lang_col) if lang_col else F.lit("all")).alias("lang"))
-    j = rep.filter(F.col("n_tokens") > 0).join(lang, "doc_id")
-    w = Window.partitionBy("lang").orderBy("avg_nll_micro", "doc_id")
-    return (j.withColumn("bucket", F.ntile(buckets).over(w))
-            .select("doc_id", "lang", "avg_nll_micro",
-                    F.col("bucket").cast("int").alias("bucket")))
+    rep = backoff_lm_score_tokens(*_split(docs, id_col, text_col,
+                                          train_mod, score_all=True))
+    return _lang_ntile(rep, docs, id_col, lang_col, buckets)
 
 
 def ppl_bucket_assign_oracle_sql(docs_sql: str,
@@ -408,18 +448,7 @@ def ppl_bucket_assign_oracle_sql(docs_sql: str,
     """DuckDB replay of :func:`ppl_bucket_assign` — the score-all LM
     report as a CTE, identical NTILE ordering."""
     rep = backoff_lm_oracle_sql(docs_sql, train_mod, score_all=True)
-    lang = lang_col if lang_col else "'all'"
-    return f"""
-        WITH rep AS ({rep}),
-        j AS (
-          SELECT r.doc_id, r.avg_nll_micro, {lang} AS lang
-          FROM rep r JOIN {docs_sql} d
-            ON r.doc_id = d.doc_id
-          WHERE r.n_tokens > 0)
-        SELECT doc_id, lang, avg_nll_micro,
-               CAST(NTILE({buckets}) OVER (PARTITION BY lang
-                 ORDER BY avg_nll_micro, doc_id) AS INT) AS bucket
-        FROM j ORDER BY doc_id"""
+    return _lang_ntile_oracle_sql(rep, docs_sql, lang_col, buckets)
 
 
 # --- interpolated Kneser-Ney (the KenLM-standard smoother) -----------------
@@ -457,24 +486,22 @@ KN_TOKEN_NANO_SQL = (
 
 # Order-n interpolated KN: each higher order is one more rung on the
 # same ladder.  Level m discounts the raw m-gram count and interpolates
-# with weight D * N1+(context .) into the FULL order-(m-1) distribution
-# — the lower ladder SQL is embedded VERBATIM as the backoff term, so
-# the recursion in the math is literal string recursion in the shared
-# SQL and every guard (zero-continuation contexts, empty training
-# split) is inherited at every order.  P_m > 0 always: the inner P_2 is
-# strictly positive by construction and each discount branch only fires
-# with its context count > 0.
+# with weight D * N1+(context .) into the FULL order-(m-1) distribution,
+# so every guard (zero-continuation contexts, empty training split) is
+# inherited at every order.  P_m > 0 always: the inner P_2 is strictly
+# positive by construction and each discount branch only fires with its
+# context count > 0.
 
 
 def kn_rung_sqls(n: int) -> list[tuple[str, str]]:
     """The order-n ladder as a list of ``(column_name, sql)`` rungs —
-    rung m references rung m-1 by COLUMN NAME instead of embedding its
-    text in both the THEN and the ELSE branch (the old expansion held
-    2^(n-2) copies of the bigram rung: the exact expression-duplication
-    blowup the ivf_assign kernel comment warns stalls codegen).  Each
-    rung's SQL text is still shared VERBATIM with the DuckDB oracle;
-    projecting a rung once and referencing it computes the identical
-    float64 value, so the replay stays bit-green."""
+    rung m references rung m-1 by COLUMN NAME: embedding its text in
+    both the THEN and the ELSE branch would double the expression per
+    order (the expression-duplication blowup the ivf_assign kernel
+    comment warns stalls codegen).  Each rung's SQL text is shared
+    VERBATIM with the DuckDB oracle; projecting a rung once and
+    referencing it computes the identical float64 value, so the replay
+    stays bit-green."""
     assert n >= 2
     rungs = [("kn_s2", KN_SCORE_SQL)]
     for m in range(3, n + 1):
@@ -495,10 +522,9 @@ def kn_token_nano_from_rung(n: int) -> str:
 
 
 def kn_score_sql_n(n: int) -> str:
-    """The order-n ladder as ONE flat expression (legacy form; the
-    engine and oracle now use :func:`kn_rung_sqls`, which projects each
-    rung once — this expansion doubles per order and is kept only as
-    the executable spec the rung form is tested against)."""
+    """The order-n ladder as ONE flat expression: the executable spec
+    :func:`kn_rung_sqls` is tested against (its size doubles per order,
+    so neither engine runs it)."""
     assert n >= 2
     sql = KN_SCORE_SQL
     for m in range(3, n + 1):
@@ -514,77 +540,14 @@ def kn_token_nano_sql_n(n: int) -> str:
     return f"CAST(round(1e9 * (-log10({kn_score_sql_n(n)}))) AS BIGINT)"
 
 
-def kneser_ney_report(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text",
-                      train_mod: int = 5) -> DataFrame:
-    """Interpolated-KN twin of :func:`backoff_lm_report`: same
-    train/held-out hash split, same output shape (doc_id, n_tokens,
-    nll_nano, avg_nll_micro).  Scale shape: the continuation-count
-    tables N1+(p.) / N1+(.w) are one extra partial-agg groupBy each
-    over the (already bounded) bigram count table — everything else is
-    the same equi-join stream as the backoff scorer."""
-    base = _tokens(docs, id_col, text_col)
-    sb = _split_bucket(F.col("doc_id"), train_mod)
-    train = base.filter(sb != 0)
-    held = base.filter(sb == 0)
-
-    uni = _ngram_counts(train, 1)
-    bi = _ngram_counts(train, 2)
-    # continuation tables: distinct-bigram types by left / right word
-    split = bi.select(
-        F.split("gram", " ").getItem(0).alias("wl"),
-        F.split("gram", " ").getItem(1).alias("wr"))
-    n1p_prev = split.groupBy("wl").agg(F.count("*").alias("n1p_prev"))
-    n1p_w = split.groupBy("wr").agg(F.count("*").alias("n1p_w"))
-    scalars = (bi.agg(F.count("*").cast("long").alias("t_big"))
-               .crossJoin(uni.agg(F.count("*").cast("long")
-                                  .alias("v_uni"))))
-
-    pos_rows = held.select(
-        "doc_id",
-        F.posexplode_outer("ws").alias("pos", "w"),
-        F.col("ws").alias("_ws"),
-    ).select("doc_id", "pos", "w",
-             F.expr("CASE WHEN pos >= 1 THEN _ws[pos - 1] END")
-             .alias("p1"))
-
-    j = (pos_rows
-         .join(F.broadcast(scalars))
-         .join(bi.select(F.col("gram").alias("_g2"),
-                         F.col("c").alias("_c2")),
-               F.concat_ws(" ", "p1", "w") == F.col("_g2"), "left")
-         .join(uni.select(F.col("gram").alias("_g1p"),
-                          F.col("c").alias("_c1prev")),
-               F.col("p1") == F.col("_g1p"), "left")
-         .join(n1p_prev, F.col("p1") == F.col("wl"), "left")
-         .join(n1p_w, F.col("w") == F.col("wr"), "left")
-         .select("doc_id", "pos", "t_big", "v_uni",
-                 F.coalesce("_c2", F.lit(0)).alias("c2"),
-                 F.coalesce("_c1prev", F.lit(0)).alias("c1prev"),
-                 F.coalesce("n1p_prev", F.lit(0)).alias("n1p_prev"),
-                 F.coalesce("n1p_w", F.lit(0)).alias("n1p_w")))
-
-    scored = j.withColumn(
-        "tok_nano",
-        F.when(F.col("pos").isNull(), None)
-        .otherwise(F.expr(KN_TOKEN_NANO_SQL)))
-    agg = scored.groupBy("doc_id").agg(
-        F.count("tok_nano").cast("long").alias("n_tokens"),
-        F.sum("tok_nano").alias("nll_nano"))
-    return agg.selectExpr(
-        "doc_id", "n_tokens", "nll_nano",
-        "CASE WHEN n_tokens = 0 THEN NULL "
-        "ELSE CAST(round(nll_nano / (1000.0 * n_tokens)) AS BIGINT) END"
-        " AS avg_nll_micro")
-
-
 def kneser_ney_n_report(docs: DataFrame, n: int = 3,
                         id_col: str = "doc_id", text_col: str = "text",
                         train_mod: int = 5,
                         score_all: bool = False) -> DataFrame:
-    """Order-n interpolated KN (n=5 is CCNet's production KenLM): same
-    split and output shape as :func:`kneser_ney_report` (which is the
-    n=2 base of the same ladder).  ``score_all`` scores EVERY document
+    """Order-n interpolated KN (n=2 is the bigram base of the ladder,
+    n=5 CCNet's production KenLM): same train/held split and output
+    shape (doc_id, n_tokens, nll_nano, avg_nll_micro) as
+    :func:`backoff_lm_report`.  ``score_all`` scores EVERY document
     against the split-trained model — the CCNet filter shape
     (:func:`kn_ppl_bucket_assign` uses it).
 
@@ -593,18 +556,16 @@ def kneser_ney_n_report(docs: DataFrame, n: int = 3,
     one map-side-combinable groupBy over the training corpus), and
     scoring is a single equi-join stream of the held-out position frame
     against those tables on gram-string keys.  Each extra LM order adds
-    exactly two joins (c_m and N1+ of the (m-1)-context; ctx_m reuses
-    the order below's count table) — no new shuffle pattern at any n.
+    three joins (c_m, ctx_m from the order below's count table, and
+    N1+ of the (m-1)-context) — no new shuffle pattern at any n.
     Pruned production tables broadcast; full web-scale tables shuffle
     on the gram key with AQE handling the Zipfian skew.
     """
     assert n >= 2
-    base = _tokens(docs, id_col, text_col)
-    sb = _split_bucket(F.col("doc_id"), train_mod)
-    train = base.filter(sb != 0)
-    held = base if score_all else base.filter(sb == 0)
+    train, held = _split(docs, id_col, text_col, train_mod, score_all)
 
     grams = {k: _ngram_counts(train, k) for k in range(1, n + 1)}
+    # continuation tables: distinct-bigram types by left / right word
     split = grams[2].select(
         F.split("gram", " ").getItem(0).alias("wl"),
         F.split("gram", " ").getItem(1).alias("wr"))
@@ -614,24 +575,12 @@ def kneser_ney_n_report(docs: DataFrame, n: int = 3,
                .crossJoin(grams[1].agg(F.count("*").cast("long")
                                        .alias("v_uni"))))
 
-    pos_rows = held.select(
-        "doc_id",
-        F.posexplode_outer("ws").alias("pos", "w"),
-        F.col("ws").alias("_ws"),
-    ).select("doc_id", "pos", "w",
-             *[F.expr(f"CASE WHEN pos >= {k} THEN _ws[pos - {k}] END")
-               .alias(f"p{k}") for k in range(1, n)])
-
-    def _ctx_cols(m: int) -> list[str]:
-        """p_{m-1} .. p1 — the (m-1)-word context, oldest first."""
-        return [f"p{k}" for k in range(m - 1, 0, -1)]
-
-    j = pos_rows.join(F.broadcast(scalars))
-    out_cols = ["doc_id", "pos", "t_big", "v_uni"]
     # level 2 rung
-    j = (j.join(grams[2].select(F.col("gram").alias("_g2"),
-                                F.col("c").alias("_c2")),
-                F.concat_ws(" ", "p1", "w") == F.col("_g2"), "left")
+    j = (_positions(held, n - 1)
+         .join(F.broadcast(scalars))
+         .join(grams[2].select(F.col("gram").alias("_g2"),
+                               F.col("c").alias("_c2")),
+               F.concat_ws(" ", "p1", "w") == F.col("_g2"), "left")
          .join(grams[1].select(F.col("gram").alias("_g1p"),
                                F.col("c").alias("_c1prev")),
                F.col("p1") == F.col("_g1p"), "left")
@@ -642,9 +591,10 @@ def kneser_ney_n_report(docs: DataFrame, n: int = 3,
              F.coalesce("n1p_prev", F.lit(0)).alias("n1p_prev"),
              F.coalesce("n1p_w", F.lit(0)).alias("n1p_w")]
     # levels 3..n: c{m} on the m-tuple, ctx{m} from the (m-1)-gram
-    # table, N1+(context .) from the m-gram table's 2-field prefix agg
+    # table, N1+(context .) from the m-gram table's (m-1)-word prefix
+    # agg; the context is p_{m-1} .. p1, oldest first
     for m in range(3, n + 1):
-        ctx = _ctx_cols(m)
+        ctx = [f"p{k}" for k in range(m - 1, 0, -1)]
         n1pctx = (grams[m].select(F.expr(
             f"substring_index(gram, ' ', {m - 1})").alias(f"_x{m}"))
             .groupBy(f"_x{m}").agg(F.count("*").alias(f"_n1pctx{m}")))
@@ -659,32 +609,13 @@ def kneser_ney_n_report(docs: DataFrame, n: int = 3,
         exprs += [F.coalesce(f"_c{m}", F.lit(0)).alias(f"c{m}"),
                   F.coalesce(f"_ctx{m}", F.lit(0)).alias(f"ctx{m}"),
                   F.coalesce(f"_n1pctx{m}", F.lit(0)).alias(f"n1pctx{m}")]
-    j = j.select(*out_cols, *exprs)
+    j = j.select("doc_id", "pos", "t_big", "v_uni", *exprs)
 
     # each rung is projected ONCE and referenced by name by the rung
-    # above (kn_rung_sqls) — the plan holds n-1 rung expressions total
-    # instead of the 2^(n-2) copies the flat expansion carried
+    # above (kn_rung_sqls): the plan holds n-1 rung expressions
     for rung_name, rung_sql in kn_rung_sqls(n):
         j = j.withColumn(rung_name, F.expr(rung_sql))
-    scored = j.withColumn(
-        "tok_nano",
-        F.when(F.col("pos").isNull(), None)
-        .otherwise(F.expr(kn_token_nano_from_rung(n))))
-    agg = scored.groupBy("doc_id").agg(
-        F.count("tok_nano").cast("long").alias("n_tokens"),
-        F.sum("tok_nano").alias("nll_nano"))
-    return agg.selectExpr(
-        "doc_id", "n_tokens", "nll_nano",
-        "CASE WHEN n_tokens = 0 THEN NULL "
-        "ELSE CAST(round(nll_nano / (1000.0 * n_tokens)) AS BIGINT) END"
-        " AS avg_nll_micro")
-
-
-def kneser_ney3_report(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text",
-                       train_mod: int = 5) -> DataFrame:
-    """Trigram instance of the order-n ladder (q244)."""
-    return kneser_ney_n_report(docs, 3, id_col, text_col, train_mod)
+    return _per_doc_nll(j, kn_token_nano_from_rung(n))
 
 
 def kneser_ney_n_oracle_sql(docs_sql: str, n: int = 3,
@@ -695,8 +626,6 @@ def kneser_ney_n_oracle_sql(docs_sql: str, n: int = 3,
     generated by the same loop as the Spark joins.  ``score_all``
     mirrors the report's CCNet filter shape."""
     assert n >= 2
-    ws = (r"list_filter(string_split_regex(lower(trim(text)),"
-          r" '[ \t\n\r\f]+'), w -> w <> '')")
 
     def _gram_cte(k: int) -> str:
         if k == 1:
@@ -709,7 +638,8 @@ def kneser_ney_n_oracle_sql(docs_sql: str, n: int = 3,
                 f"i -> {joined}) ELSE [] END) AS g FROM train) "
                 f"GROUP BY g)")
 
-    ctes = [_gram_cte(k) for k in range(1, n + 1)]
+    ctes = [_split_oracle_ctes(docs_sql, train_mod, score_all)]
+    ctes += [_gram_cte(k) for k in range(1, n + 1)]
     ctes.append("sp AS (SELECT string_split(gram, ' ')[1] AS wl, "
                 "string_split(gram, ' ')[2] AS wr FROM g2)")
     ctes.append("n1p_prev AS (SELECT wl, COUNT(*) AS n1p_prev "
@@ -771,48 +701,16 @@ def kneser_ney_n_oracle_sql(docs_sql: str, n: int = 3,
         prev = f"lad_{rung_name}"
     ctes.append(f"scored AS (SELECT doc_id, {kn_token_nano_from_rung(n)}"
                 f" AS tok_nano FROM {prev})")
-    ctes.append("""agg AS (
-          SELECT h.doc_id,
-                 COUNT(s.tok_nano) AS n_tokens,
-                 SUM(s.tok_nano) AS nll_nano
-          FROM held h LEFT JOIN scored s USING (doc_id)
-          GROUP BY h.doc_id)""")
-
-    body = ",\n        ".join(ctes)
-    sb = _split_bucket_sql(train_mod)
-    held = ("SELECT doc_id, ws FROM base" if score_all else
-            "SELECT doc_id, ws FROM base WHERE sb = 0")
-    return f"""
-        WITH base AS (
-          SELECT doc_id, {ws} AS ws, {sb} AS sb
-          FROM {docs_sql}),
-        train AS (SELECT doc_id, ws FROM base WHERE sb <> 0),
-        held AS ({held}),
-        {body}
-        SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-               CAST(nll_nano AS BIGINT) AS nll_nano,
-               CASE WHEN n_tokens = 0 THEN NULL
-                    ELSE CAST(round(nll_nano / (1000.0 * n_tokens))
-                         AS BIGINT) END AS avg_nll_micro
-        FROM agg ORDER BY doc_id"""
-
-
-def kneser_ney3_oracle_sql(docs_sql: str, train_mod: int = 5) -> str:
-    """Trigram instance of the generated order-n oracle (q244)."""
-    return kneser_ney_n_oracle_sql(docs_sql, 3, train_mod)
+    ctes.append(_PER_DOC_NLL_SQL)
+    return "\n        WITH " + ",\n        ".join(ctes)
 
 
 def kneser_ney_oracle_sql(docs_sql: str, train_mod: int = 5) -> str:
-    """DuckDB replay with the IDENTICAL KN ladder SQL text."""
-    ws = (r"list_filter(string_split_regex(lower(trim(text)),"
-          r" '[ \t\n\r\f]+'), w -> w <> '')")
-    sb = _split_bucket_sql(train_mod)
+    """Hand-written bigram KN replay with the IDENTICAL KN ladder SQL
+    text — the independent spec the generated order-n ladder
+    (:func:`kneser_ney_n_report` at n=2) is checked against (q243)."""
     return f"""
-        WITH base AS (
-          SELECT doc_id, {ws} AS ws, {sb} AS sb
-          FROM {docs_sql}),
-        train AS (SELECT doc_id, ws FROM base WHERE sb <> 0),
-        held AS (SELECT doc_id, ws FROM base WHERE sb = 0),
+        WITH {_split_oracle_ctes(docs_sql, train_mod, False)},
         uni AS (
           SELECT w AS gram, COUNT(*) AS c
           FROM (SELECT UNNEST(ws) AS w FROM train) GROUP BY w),
@@ -851,18 +749,7 @@ def kneser_ney_oracle_sql(docs_sql: str, train_mod: int = 5) -> str:
           LEFT JOIN n1p_w nw ON r.w = nw.wr),
         scored AS (
           SELECT doc_id, {KN_TOKEN_NANO_SQL} AS tok_nano FROM joined),
-        agg AS (
-          SELECT h.doc_id,
-                 COUNT(s.tok_nano) AS n_tokens,
-                 SUM(s.tok_nano) AS nll_nano
-          FROM held h LEFT JOIN scored s USING (doc_id)
-          GROUP BY h.doc_id)
-        SELECT doc_id, CAST(n_tokens AS BIGINT) AS n_tokens,
-               CAST(nll_nano AS BIGINT) AS nll_nano,
-               CASE WHEN n_tokens = 0 THEN NULL
-                    ELSE CAST(round(nll_nano / (1000.0 * n_tokens))
-                         AS BIGINT) END AS avg_nll_micro
-        FROM agg ORDER BY doc_id"""
+        {_PER_DOC_NLL_SQL}"""
 
 
 def kn_ppl_bucket_assign(docs: DataFrame, n: int = 5,
@@ -884,18 +771,9 @@ def kn_ppl_bucket_assign(docs: DataFrame, n: int = 5,
     equi-joins per order) plus one per-language window rank — no new
     shuffle pattern beyond :func:`kneser_ney_n_report`.
     """
-    from pyspark.sql import Window
-
     rep = kneser_ney_n_report(docs, n, id_col, text_col, train_mod,
                               score_all=True)
-    lang = docs.select(
-        F.col(id_col).alias("doc_id"),
-        (F.col(lang_col) if lang_col else F.lit("all")).alias("lang"))
-    j = rep.filter(F.col("n_tokens") > 0).join(lang, "doc_id")
-    w = Window.partitionBy("lang").orderBy("avg_nll_micro", "doc_id")
-    return (j.withColumn("bucket", F.ntile(buckets).over(w))
-            .select("doc_id", "lang", "avg_nll_micro",
-                    F.col("bucket").cast("int").alias("bucket")))
+    return _lang_ntile(rep, docs, id_col, lang_col, buckets)
 
 
 def kn_ppl_bucket_assign_oracle_sql(docs_sql: str, n: int = 5,
@@ -906,15 +784,4 @@ def kn_ppl_bucket_assign_oracle_sql(docs_sql: str, n: int = 5,
     order-n KN report as a CTE, identical NTILE ordering."""
     rep = kneser_ney_n_oracle_sql(docs_sql, n, train_mod,
                                   score_all=True)
-    lang = lang_col if lang_col else "'all'"
-    return f"""
-        WITH rep AS ({rep}),
-        j AS (
-          SELECT r.doc_id, r.avg_nll_micro, {lang} AS lang
-          FROM rep r JOIN {docs_sql} d
-            ON r.doc_id = d.doc_id
-          WHERE r.n_tokens > 0)
-        SELECT doc_id, lang, avg_nll_micro,
-               CAST(NTILE({buckets}) OVER (PARTITION BY lang
-                 ORDER BY avg_nll_micro, doc_id) AS INT) AS bucket
-        FROM j ORDER BY doc_id"""
+    return _lang_ntile_oracle_sql(rep, docs_sql, lang_col, buckets)

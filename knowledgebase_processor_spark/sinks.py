@@ -50,7 +50,14 @@ def bucketed(df: DataFrame, key: str = "source_doc",
 def write_bucketed(df: DataFrame, path: str, key: str = "source_doc",
                    n_buckets: int = N_BUCKETS_DEFAULT, mode: str = "overwrite") -> None:
     """Initial load: url-hash partitioned parquet table."""
-    bucketed(df, key, n_buckets).write.mode(mode).partitionBy("part_bucket").parquet(path)
+    out = bucketed(df, key, n_buckets)
+    out.write.mode(mode).partitionBy("part_bucket").parquet(path)
+    # zero rows leave no data file and parquet cannot infer a schema
+    # from an empty directory: keep one empty file as bucket 0
+    if os.path.isdir(path) and not any(
+            n.startswith("part_bucket=") for n in os.listdir(path)):
+        (out.limit(0).drop("part_bucket").write.mode("overwrite")
+         .parquet(os.path.join(path, "part_bucket=0")))
 
 
 def merge_upsert(spark: SparkSession, new_rows: DataFrame, path: str,
@@ -67,10 +74,10 @@ def merge_upsert(spark: SparkSession, new_rows: DataFrame, path: str,
     the session stays in static mode, where an overwrite of a partitioned
     table replaces every bucket.
     """
-    incoming = bucketed(new_rows, key, n_buckets)
     if not os.path.isdir(path):
-        incoming.write.mode("overwrite").partitionBy("part_bucket").parquet(path)
+        write_bucketed(new_rows, path, key, n_buckets)
         return
+    incoming = bucketed(new_rows, key, n_buckets)
     touched = [r["part_bucket"] for r in incoming.select("part_bucket").distinct().collect()]
     keys = incoming.select(key).distinct()
     old = (spark.read.parquet(path)

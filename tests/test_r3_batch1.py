@@ -107,11 +107,11 @@ def test_kneser_ney_hand_computed(spark):
     uni a:1 b:2 c:1 (V=3); bi "a b":1 "b c":1 (T=2); N1+(a.)=1,
     N1+(b.)=1; N1+(.b)=1, N1+(.c)=1.  T+V = 5."""
     from knowledgebase_processor_spark.operators.nglm import (
-        kneser_ney_report)
+        kneser_ney_n_report)
     docs = spark.createDataFrame(
         [(1, "a b"), (2, "b c"), (0, "a b z"), (5, "")],
         "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in kneser_ney_report(docs).collect()}
+    rows = {r["doc_id"]: r for r in kneser_ney_n_report(docs, 2).collect()}
     import math
     def nano(p):
         return round(1e9 * -math.log10(p))
@@ -130,10 +130,10 @@ def test_kneser_ney_final_only_context(spark):
     ONLY document-finally (c(p)>0, zero continuations) must take the
     continuation floor, not emit probability 0."""
     from knowledgebase_processor_spark.operators.nglm import (
-        kneser_ney_report)
+        kneser_ney_n_report)
     # train: "x q" -> q seen only finally; held: "q z" exercises
     # pos1 with c1prev=c(q)=1, n1p_prev=0
     docs = spark.createDataFrame(
         [(1, "x q"), (0, "q z")], "doc_id long, text string")
-    r = {x["doc_id"]: x for x in kneser_ney_report(docs).collect()}[0]
+    r = {x["doc_id"]: x for x in kneser_ney_n_report(docs, 2).collect()}[0]
     assert r["n_tokens"] == 2 and r["nll_nano"] is not None

@@ -98,7 +98,7 @@ def test_lm_empty_training_split_stays_defined(spark):
     the shared ladder SQL defined (Spark would return NULL on /0 while
     DuckDB float division yields inf — engine divergence)."""
     from knowledgebase_processor_spark.operators.nglm import (
-        backoff_lm_report, kneser_ney_report)
+        backoff_lm_report, kneser_ney_n_report)
     docs = spark.createDataFrame(
         [(0, "alpha beta gamma"), (5, "delta epsilon")],
         "doc_id long, text string")
@@ -107,7 +107,7 @@ def test_lm_empty_training_split_stays_defined(spark):
     # every token takes the OOV rung against the phantom 1-token corpus:
     # score = ladder_alpha / 1, finite and non-NULL
     assert all(r["nll_nano"] is not None and r["nll_nano"] > 0 for r in bo)
-    kn = kneser_ney_report(docs, train_mod=5).orderBy("doc_id").collect()
+    kn = kneser_ney_n_report(docs, 2, train_mod=5).orderBy("doc_id").collect()
     assert [r["doc_id"] for r in kn] == [0, 5]
     # KN's continuation floor on the phantom corpus is (0+1)/1 = 1.0,
     # so nll is exactly 0 — defined (non-NULL), not divergent
@@ -122,11 +122,11 @@ def test_kneser_ney3_hand_computed(spark):
     import math
 
     from knowledgebase_processor_spark.operators.nglm import (
-        kneser_ney3_report)
+        kneser_ney_n_report)
     docs = spark.createDataFrame(
         [(1, "a b c"), (2, "a b d"), (0, "a b c z"), (5, "")],
         "doc_id long, text string")
-    rows = {r["doc_id"]: r for r in kneser_ney3_report(docs).collect()}
+    rows = {r["doc_id"]: r for r in kneser_ney_n_report(docs, 3).collect()}
 
     def nano(p):
         return round(1e9 * -math.log10(p))
@@ -155,15 +155,15 @@ def test_kneser_ney3_beats_bigram_on_trigram_structure(spark):
     """A corpus with deterministic trigram transitions that bigrams
     cannot capture: trigram KN must assign lower perplexity."""
     from knowledgebase_processor_spark.operators.nglm import (
-        kneser_ney3_report, kneser_ney_report)
+        kneser_ney_n_report)
     # after "x a" always "p", after "y a" always "q": trigram-predictable,
     # bigram sees a->p and a->q as a coin flip
     body = "x a p y a q " * 30
     docs = spark.createDataFrame(
         [(1, body), (2, body), (3, body), (4, body), (0, body)],
         "doc_id long, text string")
-    kn2 = kneser_ney_report(docs).collect()[0]["avg_nll_micro"]
-    kn3 = kneser_ney3_report(docs).collect()[0]["avg_nll_micro"]
+    kn2 = kneser_ney_n_report(docs, 2).collect()[0]["avg_nll_micro"]
+    kn3 = kneser_ney_n_report(docs, 3).collect()[0]["avg_nll_micro"]
     assert kn3 < kn2
 
 
@@ -208,22 +208,33 @@ def test_prepare_corpus_lm_stage(spark):
 
 
 def test_kneser_ney_n_generalizes(spark):
-    """The order-n ladder builder: n=2 reproduces the bigram report,
-    n=3 the trigram one, and n=5 (CCNet's production KenLM order) runs
-    green with perplexity no worse than n=4 on a trigram-structured
-    corpus (higher orders can only sharpen deterministic transitions)."""
+    """The order-n ladder builder: n=2 reproduces the hand-written
+    bigram DuckDB replay, n=3 the generated trigram replay, and n=5
+    (CCNet's production KenLM order) runs green with perplexity no worse
+    than n=4 on a trigram-structured corpus (higher orders can only
+    sharpen deterministic transitions)."""
+    import duckdb
+
     from knowledgebase_processor_spark.operators.nglm import (
-        kneser_ney3_report, kneser_ney_n_report, kneser_ney_report)
+        kneser_ney_n_oracle_sql, kneser_ney_n_report, kneser_ney_oracle_sql)
     body = "x a p y a q " * 30
-    docs = spark.createDataFrame(
-        [(i, body) for i in range(5)], "doc_id long, text string")
+    rows = [(i, body) for i in range(5)]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
 
     def vals(df):
         return [(r["doc_id"], r["n_tokens"], r["nll_nano"])
                 for r in df.orderBy("doc_id").collect()]
 
-    assert vals(kneser_ney_n_report(docs, 2)) == vals(kneser_ney_report(docs))
-    assert vals(kneser_ney_n_report(docs, 3)) == vals(kneser_ney3_report(docs))
+    def oracle(sql):
+        return [tuple(r[:3]) for r in con.execute(sql).fetchall()]
+
+    assert vals(kneser_ney_n_report(docs, 2)) == oracle(
+        kneser_ney_oracle_sql("documents"))
+    assert vals(kneser_ney_n_report(docs, 3)) == oracle(
+        kneser_ney_n_oracle_sql("documents", 3))
     n4 = vals(kneser_ney_n_report(docs, 4))
     n5 = vals(kneser_ney_n_report(docs, 5))
     assert len(n5) == 1 and n5[0][1] == n4[0][1] > 0

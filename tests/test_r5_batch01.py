@@ -4,8 +4,8 @@ projection, and prepare_corpus opt-in stage hardening.
 Round-4 VERDICT item 1 / ADVICE: the trained-LM family keyed its
 train/held split and the prepare_corpus bucket-assign join on
 ``cast(doc_id as long)``, so a string/url-keyed corpus silently lost
-every row.  The split is now ``nglm._split_bucket`` — try_cast-first
-(numeric ids keep the historical ``% train_mod`` membership) with a
+every row.  The split is now ``nglm._split_bucket`` — integer ids
+keep the ``% train_mod`` membership, everything else takes a
 salted-md5 fallback (operators/split.py idiom) — and every join keeps
 the id's ORIGINAL type.
 """

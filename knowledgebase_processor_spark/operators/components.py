@@ -13,7 +13,8 @@ DataFrame ops only:
 * edges are symmetrized once, then each iteration is one shuffle
   (groupBy min) + one join;
 * ``localCheckpoint`` truncates the exponentially growing plan per
-  iteration (mandatory for iterative DataFrame jobs);
+  iteration (mandatory for iterative DataFrame jobs); each superseded
+  checkpoint is released, so a call leaves only its result's blocks;
 * head-entity skew (one node linked by millions) is bounded because
   min-label aggregation is a partial-aggregatable ``min`` — the map-side
   combine absorbs the skew before the shuffle; AQE skew-join handles the
@@ -25,6 +26,15 @@ Converges in O(log n) iterations on real graphs.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
+
+
+def _release(df: DataFrame) -> None:
+    """Drop the blocks of a ``localCheckpoint``ed frame.  They belong to
+    the checkpoint's RDD, which ``DataFrame.unpersist`` does not reach; a
+    frame that is not a checkpoint is left alone."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
 
 
 def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -70,11 +80,14 @@ def connected_components(edges: DataFrame, src: str = "src", dst: str = "dst",
                    .join(labels.alias("o"), "node")
                    .filter(F.col("n.component") != F.col("o.component"))
                    .limit(1).count())
+        _release(labels)
         labels = new_labels
         if changed == 0:
             converged = True
             break
+    _release(sym)
     if not converged:
+        _release(labels)
         raise RuntimeError(
             f"connected_components did not converge in {max_iterations} "
             "iterations — raise max_iterations (graph diameter > 2^iters)")
@@ -153,7 +166,9 @@ def incremental_components(assignment: DataFrame, old_edges: DataFrame,
     component footprint, not the corpus.  Endpoints never seen before
     are handled by the CC itself.  Label contract matches
     :func:`connected_components` (min member id), so a full re-run and
-    the incremental path agree bit-for-bit (tested).
+    the incremental path agree bit-for-bit (tested).  The result is
+    checkpointed, so the call's own checkpoints are released before it
+    returns.
 
     All joins are hash joins on node/component keys; the touched
     component set is typically tiny and broadcasts.
@@ -183,6 +198,10 @@ def incremental_components(assignment: DataFrame, old_edges: DataFrame,
                               "left_semi")
               .join(resolved.select("node"), "node", "left_anti")
               .select("node", F.col("node").alias("component")))
-    return (untouched.select("node", "component")
-            .unionByName(resolved.select("node", "component"))
-            .unionByName(lonely))
+    out = (untouched.select("node", "component")
+           .unionByName(resolved.select("node", "component"))
+           .unionByName(lonely)
+           .localCheckpoint())
+    _release(new_e)
+    _release(resolved)
+    return out

@@ -37,7 +37,7 @@ RDF = "http://www.w3.org/1999/02/22-rdf-syntax-ns#"
 RDFS = "http://www.w3.org/2000/01/rdf-schema#"
 XSD = "http://www.w3.org/2001/XMLSchema#"
 
-_NON_ALNUM = re.compile(r"[^a-z0-9]")
+_NON_ALNUM_RUNS = re.compile(r"[^a-z0-9]+")
 _HYPHEN_RUNS = re.compile(r"-+")
 _TODO_STRIP = re.compile(r"[^\w\s-]")
 _WS_RUNS = re.compile(r"\s+")
@@ -48,9 +48,8 @@ def normalize_for_id(text: str) -> str:
     if not text:
         return ""
     out = unicodedata.normalize("NFKD", text).lower()
-    out = _NON_ALNUM.sub("-", out)
-    out = _HYPHEN_RUNS.sub("-", out)
-    return out.strip("-")
+    # one pass: a run of non-alphanumerics (hyphens included) -> one "-"
+    return _NON_ALNUM_RUNS.sub("-", out).strip("-")
 
 
 def hash16(*parts: str) -> str:

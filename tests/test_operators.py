@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from knowledgebase_processor_spark.operators.components import (
     canonical_entities, connected_components, coreference_edges,
+    incremental_components,
 )
 from knowledgebase_processor_spark.operators.dedup import (
     exact_duplicates, minhash_lsh_pairs, minhash_signatures,
@@ -223,6 +224,28 @@ def test_connected_components_two_clusters(spark):
     labels = {r["node"]: r["component"]
               for r in connected_components(edges).collect()}
     assert labels == {"a": "a", "b": "a", "c": "a", "y": "y", "z": "y"}
+
+
+def test_connected_components_leave_only_their_result_persisted(spark):
+    jsc = spark.sparkContext._jsc
+
+    def persisted():
+        return set(jsc.getPersistentRDDs().keys())
+
+    # a 41-node chain takes several rounds, each a localCheckpoint
+    edges = spark.createDataFrame(
+        [(f"n{i:02d}", f"n{i + 1:02d}") for i in range(40)], "src string, dst string")
+    before = persisted()
+    labels = connected_components(edges)
+    assert len(persisted() - before) <= 1
+    assert {r.component for r in labels.collect()} == {"n00"}
+
+    new = spark.createDataFrame([("n40", "p0"), ("q1", "q2")], "src string, dst string")
+    before = persisted()
+    inc = incremental_components(labels, edges, new)
+    assert len(persisted() - before) <= 1
+    got = {r.node: r.component for r in inc.collect()}
+    assert got["p0"] == "n00" and got["q2"] == "q1" and len(got) == 44
 
 
 def test_coreference_and_canonicalization(spark):

@@ -2,6 +2,9 @@
 crash on arbitrary text, always produce well-formed entities, and the
 pre-merged path must equal the flat path's deduplicated triple set."""
 
+import re
+import unicodedata
+
 import pytest
 from hypothesis import given, settings, strategies as st
 
@@ -10,7 +13,7 @@ from knowledgebase_processor_spark.extract.core import (
 )
 from knowledgebase_processor_spark.extract.triples_py import entities_triples
 from knowledgebase_processor_spark.rdf_schema import KIND_RULES
-from knowledgebase_processor_spark.uris import resolve_uri
+from knowledgebase_processor_spark.uris import normalize_for_id, resolve_uri
 
 # Markdown-ish soup: text runs + the syntax fragments the extractors react to
 _FRAGMENTS = st.sampled_from([
@@ -70,6 +73,16 @@ def test_deterministic(a, b):
     tb = entities_triples(extract_entities("d", b))
     if a == b:
         assert ta == tb
+
+
+@settings(max_examples=500, deadline=None)
+@given(st.one_of(_WORDS, st.text(alphabet="aZ9-_ .\t/é\u00bd\ufb01", max_size=30)))
+def test_normalize_for_id_matches_two_pass_form(text):
+    # the id normalization's original form: every non-alphanumeric -> "-",
+    # then hyphen runs -> one "-"
+    two_pass = re.sub(r"-+", "-", re.sub(
+        r"[^a-z0-9]", "-", unicodedata.normalize("NFKD", text).lower()))
+    assert normalize_for_id(text) == two_pass.strip("-")
 
 
 # --- crawl-input kernels (html extraction, url canonicalization, openie) ---

@@ -5,7 +5,9 @@ lang)`` (BASELINE.json input_hint).  No such table ships with the sandbox,
 so we synthesize it deterministically (seed-stable, no wall clock): the
 reference's fixture corpus is embedded verbatim as page text (FIXTURES.md
 §1 synthesis rule), optionally tiled N times with distinct urls for
-scale-up benchmarks.
+scale-up benchmarks.  Where the reference specs are absent, generated
+notes (any objects with ``.url`` and ``.text``) become pages through
+``pages_from_notes`` with the same envelope and timestamps.
 
 ``extract_text`` is the reference's reader semantics
 (reader/reader.py:106-136): the extracted text IS the raw markdown —
@@ -25,6 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from ..goldens import spec_cases
 
 _EPOCH = _dt.datetime(2024, 11, 7, 12, 0, 0)   # fixed, deterministic
+_SCHEMA = "url string, warc_ts timestamp, html string, text string, lang string"
 
 
 def _html_wrap(text: str, title: str) -> str:
@@ -47,8 +50,17 @@ def fixture_pages(spark: SparkSession, copies: int = 1) -> DataFrame:
                 text,
                 "en",
             ))
-    return spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html string, text string, lang string")
+    return spark.createDataFrame(rows, _SCHEMA)
+
+
+def pages_from_notes(spark: SparkSession, notes) -> DataFrame:
+    """web_pages rows from generated notes, one page per note in order:
+    each object's ``.url`` and ``.text``, wrapped and timestamped as
+    ``fixture_pages`` does (the html title is the url's basename)."""
+    rows = [(n.url, _EPOCH + _dt.timedelta(seconds=i),
+             _html_wrap(n.text, n.url.rsplit("/", 1)[1]), n.text, "en")
+            for i, n in enumerate(notes)]
+    return spark.createDataFrame(rows, _SCHEMA)
 
 
 def extract_text(pages: DataFrame) -> DataFrame:

@@ -1,4 +1,3 @@
-import datetime
 import importlib.util
 import os
 import sys
@@ -36,12 +35,8 @@ def kg_pages(spark, note_corpus):
     benchmark's markdown generator."""
     from knowledgebase_processor_spark.goldens import SPECS_DIR
     from knowledgebase_processor_spark.sources.web_pages import (
-        _EPOCH, _html_wrap, fixture_pages)
+        fixture_pages, pages_from_notes)
     if SPECS_DIR.is_dir():
         return fixture_pages(spark)
-    notes = note_corpus.generate(7, 24, sections=2, links_per_para=2)
-    rows = [(n.url, _EPOCH + datetime.timedelta(seconds=i),
-             _html_wrap(n.text, n.url.rsplit("/", 1)[1]), n.text, "en")
-            for i, n in enumerate(notes)]
-    return spark.createDataFrame(
-        rows, "url string, warc_ts timestamp, html string, text string, lang string")
+    return pages_from_notes(
+        spark, note_corpus.generate(7, 24, sections=2, links_per_para=2))

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 from knowledgebase_processor_spark.goldens import spec_cases
 from knowledgebase_processor_spark.pipeline import web_pages_to_triples
 from knowledgebase_processor_spark.sources.web_pages import (
-    extract_text, fixture_pages, pages_to_documents,
+    extract_text, fixture_pages, pages_from_notes, pages_to_documents,
 )
 
 
@@ -42,11 +42,24 @@ def test_synthesis_is_deterministic(spark):
     assert len(a) == 2 * len(spec_cases())
 
 
-def test_web_pages_pipeline_end_to_end(spark):
-    pages = fixture_pages(spark).limit(10)
+def test_web_pages_pipeline_end_to_end(kg_pages):
+    pages = kg_pages.limit(10)
     triples = web_pages_to_triples(pages)
     n = triples.count()
     assert n > 0
     # every subject's source document is a url-rooted node
     docs = pages_to_documents(pages)
     assert docs.filter(~F.col("doc_id").startswith("https://")).count() == 0
+
+
+def test_pages_from_notes_round_trip(spark, note_corpus):
+    notes = note_corpus.generate(3, 6, sections=2)
+    pages = pages_from_notes(spark, notes)
+    rows = pages.orderBy("warc_ts").collect()
+    assert [r["url"] for r in rows] == [n.url for n in notes]
+    assert [r["text"] for r in rows] == [n.text for n in notes]
+    assert len({r["warc_ts"] for r in rows}) == len(notes)
+    # the html envelope alone gives back each note's text byte for byte
+    stripped = extract_text(pages.withColumn("text", F.lit(None).cast("string")))
+    assert {r["url"]: r["text"] for r in stripped.collect()} == \
+        {n.url: n.text for n in notes}
